@@ -38,8 +38,8 @@ object Tables {
     * raw arrival files — a stream must see files as they land.
     * Like the other intake accessors this is SIZE-GATED
     * ([[graft.operators.DedupPrepare.rawNeedsIntake]]): a tiny corpus
-    * whose single-task scan costs less than the bucketed layer's fixed
-    * task floor serves raw. */
+    * whose single-task scan costs less than the bucketed layer's task
+    * floor (one task per session shuffle partition) serves raw. */
   def events(s: SparkSession, d: String): DataFrame =
     graft.operators.DedupPrepare.intakeEvents(s, d)
 

@@ -24,6 +24,11 @@ import graft.Tables
   *    pair-forming shuffle, the single most expensive exchange of the
   *    family, is paid once at write time and never again.
   *
+  * Every layer of one corpus is written with ONE bucket count, the
+  * session's shuffle parallelism ([[layerBuckets]]): co-bucketed layers
+  * join without an exchange, and a layer build or read pays one task
+  * per core, not a fixed bucket count sized for a bigger cluster.
+  *
   * Materialization is lazy per (session catalog, corpus dir): the first
   * query that needs a layer writes it (mode=overwrite, so a fresh JVM
   * can never read a stale catalog entry), later queries just read the
@@ -32,10 +37,35 @@ import graft.Tables
   */
 object DedupPrepare {
 
-  /** Bucket count: matches the session shuffle parallelism the engine
-    * configures (32 on the bench box); at cluster scale this would be
-    * sized to corpus-bytes / target-partition-bytes. */
-  val Buckets = 32
+  /** Layer bucket count per corpus dir: the session's shuffle
+    * parallelism as the planner reads it (`spark.sql.shuffle.partitions`,
+    * which every entry point sets to its core count, unless AQE's
+    * initial partition number overrides it), read when the corpus's
+    * first layer builds and memoized so every layer of one corpus
+    * generation shares one count — co-bucketed joins between its layers
+    * stay exchange-free. Never below the shuffle-partition count, so a mixed
+    * join keeps reusing a bucketed side's partitioning instead of
+    * re-shuffling it; never above it, because every layer build and
+    * read pays one task per bucket. Same lifecycle as [[fpCache]]
+    * ([[invalidate]] re-resolves it). Appends and compactions never
+    * consult it: [[LayerMaintenance]] keeps a standing table's own
+    * catalog count ([[tableBuckets]]). */
+  private val bucketCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+
+  private[graft] def layerBuckets(s: SparkSession, dir: String): Int =
+    bucketCache.computeIfAbsent(dir,
+      _ => Int.box(s.sessionState.conf.numShufflePartitions))
+
+  /** The bucket count a standing layer table was written with, from the
+    * catalog: appends into it must match (Spark rejects an append whose
+    * bucketing differs), and a compaction or merge rewrite keeps it so
+    * the table stays co-bucketed with its generation. */
+  private[graft] def tableBuckets(s: SparkSession, name: String): Int =
+    s.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
+      .bucketSpec.map(_.numBuckets)
+      .getOrElse(sys.error(s"layer table $name is not bucketed"))
 
   /** Corpus fingerprint: hash of every data file's (path, length,
     * mtime) under `<dir>/documents.parquet`. Folded into the prep-table
@@ -57,8 +87,11 @@ object DedupPrepare {
   def invalidate(dir: String): Unit = {
     fpCache.keySet.removeIf(_.startsWith(s"$dir::"))
     rgBytesCache.keySet.removeIf(_.startsWith(s"$dir/"))
+    bucketCache.remove(dir)
   }
-  def invalidateAll(): Unit = { fpCache.clear(); rgBytesCache.clear() }
+  def invalidateAll(): Unit = {
+    fpCache.clear(); rgBytesCache.clear(); bucketCache.clear()
+  }
 
   /** Build-time log (layer key → seconds), appended by [[ensure]] each
     * time a layer actually BUILDS (not when it is read back). Bench
@@ -160,11 +193,11 @@ object DedupPrepare {
     * delta files in the same buckets; partitioning survives, the
     * single-file sort elision is restored by compaction). */
   private[operators] def writeBucketed(df: DataFrame, name: String,
-      bucketCols: Seq[String], sortCols: Seq[String],
+      buckets: Int, bucketCols: Seq[String], sortCols: Seq[String],
       mode: String = "overwrite"): Unit =
-    df.repartition(Buckets, bucketCols.map(col): _*)
+    df.repartition(buckets, bucketCols.map(col): _*)
       .write.mode(mode).format("parquet")
-      .bucketBy(Buckets, bucketCols.head, bucketCols.tail: _*)
+      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(sortCols.head, sortCols.tail: _*)
       .saveAsTable(name)
 
@@ -213,7 +246,7 @@ object DedupPrepare {
       // alias's stale one.
       dropAliases(base)
       sweepStale(s, base)
-      // repartition on the bucket key into exactly `Buckets` partitions
+      // repartition on the bucket key into exactly one partition per bucket
       // BEFORE the bucketed write: HashPartitioning and bucket-id use
       // the same Murmur3 hash, so every write task holds exactly one
       // bucket and each bucket lands in ONE file. Spark only trusts a
@@ -241,7 +274,7 @@ object DedupPrepare {
         s"layer $family$variant build plan has unpartitioned window(s): " +
           unpart.mkString("; "))
       try {
-        writeBucketed(body, name0, bucketCols, sortCols)
+        writeBucketed(body, name0, layerBuckets(s, dir), bucketCols, sortCols)
         // the layer is published; NOW its truncation audits may say so
         pendingCapAudits.reverse.foreach { case (physical, a) =>
           writeCapAudit(s, physical, a, mode = "overwrite") }
@@ -271,16 +304,19 @@ object DedupPrepare {
     * bytes-per-row-group at or above `spark.graft.intake.minRgBytes`
     * (default 16 MB: a 16 MB+ undivided row group is roughly a second
     * of scan+decode pinned to one core, which already exceeds the
-    * bucketed layer's fixed ~0.3 s 32-task floor). Below the gate the
-    * raw single-file scan is strictly cheaper (measured at sf0.1: the
-    * always-on layer read cost +0.28 s MEAN across the 15 map-side
-    * document queries against a 3.5 MB corpus — a pure task-floor tax),
-    * so the accessor serves the raw table untouched. The gate is a
-    * session conf, not a hard constant: production (and the test suite,
-    * which pins the AT-SCALE plan shapes — SparkTestBase forces 0) can
-    * set it; the criterion is scale-adaptive by construction — the
-    * driver's sf0.1 bench stays on raw files while sf1.0+/sf10 corpora
-    * cross it naturally (35 MB+ single-row-group files). */
+    * bucketed layer's task floor — one task per bucket, and a corpus
+    * has as many buckets as the session has shuffle partitions, see
+    * [[layerBuckets]]). Below the gate the raw single-file scan was
+    * measured cheaper (at sf0.1, when layers still had a fixed 32
+    * buckets: the always-on layer read cost +0.28 s MEAN across the 15
+    * map-side document queries against a 3.5 MB corpus — a pure
+    * task-floor tax), so the accessor serves the raw table untouched.
+    * The gate is a session conf, not a hard constant: production (and
+    * the test suite, which pins the AT-SCALE plan shapes —
+    * SparkTestBase forces 0) can set it; the criterion is
+    * scale-adaptive by construction — the sf0.1 bench stays on raw
+    * files while sf1.0+/sf10 corpora cross it naturally (35 MB+
+    * single-row-group files). */
   private val IntakeMinRgBytesDefault: Long = 16L * 1024 * 1024
   private val rgBytesCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -310,12 +346,14 @@ object DedupPrepare {
     * regression cluster): r15 size-gated layer INTAKE on the measured
     * bytes-per-row-group crossover but left layer SERVING always-on, so
     * at tiny scale the layer-served dispatchers (dd01/dd05, ta13–ta18,
-    * sp11) paid the fixed 32-bucket read floor + histogram-join stages
-    * where the legacy single-pass kernel scan of a few-MB corpus is
-    * ~50 ms (driver sf0.1: ta14 0.32×, ta16 0.58×, ta17 0.52× …, while
-    * the same paths win 2.6–12× at sf10). Same doctrine, same
-    * criterion, own conf: a dispatcher serves the LAYERED form iff the
-    * raw corpus file's bytes-per-row-group ≥
+    * sp11) paid the layers' bucket-read floor (then a fixed 32 tasks;
+    * now one task per session shuffle partition, see [[layerBuckets]])
+    * + histogram-join stages where the legacy single-pass kernel scan
+    * of a few-MB corpus is ~50 ms (sf0.1 bench, 32 cores: ta14 0.32×,
+    * ta16 0.58×, ta17 0.52× …, while the same paths win 2.6–12× at
+    * sf10). Same doctrine, same criterion, own conf: a dispatcher
+    * serves the LAYERED form iff the raw corpus file's
+    * bytes-per-row-group ≥
     * `spark.graft.docfeats.serve.minRgBytes` (default = the intake
     * crossover, 16 MB — once a corpus is worth ingesting it is worth
     * serving from the layers), else the legacy (r14) form, which the

@@ -205,16 +205,20 @@ object LayerMaintenance {
           // between families) still absorb below.
           LayerDelta(f.family + f.variant, "replayed", 0L, 0.0)
         case Some(actual) =>
+          // the standing table's own count, never the session's: an
+          // append must match its bucketing, and a merge rewrite stays
+          // co-bucketed with the rest of the corpus generation
+          val nb = DedupPrepare.tableBuckets(s, actual)
           val (rows, secs) = timed {
             f.family match {
               case "shingles3" =>
                 val d = deltaShingles
-                DedupPrepare.writeBucketed(d, actual, f.bucketCols, f.sortCols,
+                DedupPrepare.writeBucketed(d, actual, nb, f.bucketCols, f.sortCols,
                   mode = "append")
                 d.count()
               case "minhash" =>
                 val d = Dedup.minhashSigFromShingles(deltaShingles)
-                DedupPrepare.writeBucketed(d, actual, f.bucketCols, f.sortCols,
+                DedupPrepare.writeBucketed(d, actual, nb, f.bucketCols, f.sortCols,
                   mode = "append")
                 d.count()
               case "lshbands" =>
@@ -231,7 +235,7 @@ object LayerMaintenance {
                   .filter(col("rn") <=
                     lit(Dedup.BucketCap.toLong) - coalesce(col("n_old"), lit(0L)))
                   .select(col("b"), col("bh"), col("doc_id")))
-                DedupPrepare.writeBucketed(d, actual, f.bucketCols, f.sortCols,
+                DedupPrepare.writeBucketed(d, actual, nb, f.bucketCols, f.sortCols,
                   mode = "append")
                 // "no silent caps": account for delta rows the cap−n_old
                 // admission rejected, appended to the layer's audit table
@@ -262,7 +266,7 @@ object LayerMaintenance {
                   .as[(Long, String, Long)]
                   .mapPartitions(Multimodal.pixelLayerRows)
                   .toDF()
-                DedupPrepare.writeBucketed(d, actual, f.bucketCols, f.sortCols,
+                DedupPrepare.writeBucketed(d, actual, nb, f.bucketCols, f.sortCols,
                   mode = "append")
                 d.count()
               case "tokdict" =>
@@ -273,7 +277,7 @@ object LayerMaintenance {
                 // name, like unifreq.
                 val merged = TextFeatures.vocabMerged(s.table(actual),
                   TextFeatures.batchTokens(batch))
-                DedupPrepare.writeBucketed(merged, newName, f.bucketCols,
+                DedupPrepare.writeBucketed(merged, newName, nb, f.bucketCols,
                   f.sortCols)
                 s.sql(s"DROP TABLE IF EXISTS $actual")
                 DedupPrepare.dropAliases(base)
@@ -288,7 +292,7 @@ object LayerMaintenance {
                 val vNew = DedupPrepare.resolveAlias(DedupPrepare.naming(
                   s, "tokdict", dir, s"_s${TextFeatures.VocabStripes}")._2)
                 val d = TextFeatures.docFeatRows(s, batch, s.table(vNew))
-                DedupPrepare.writeBucketed(d, actual, f.bucketCols,
+                DedupPrepare.writeBucketed(d, actual, nb, f.bucketCols,
                   f.sortCols, mode = "append")
                 d.count()
               case "unifreq" =>
@@ -299,7 +303,8 @@ object LayerMaintenance {
                   .groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("c"))
                 val merged = s.table(actual).unionByName(deltaCnt)
                   .groupBy(col("lang"), col("tok")).agg(sum(col("c")).as("c"))
-                DedupPrepare.writeBucketed(merged, newName, f.bucketCols, f.sortCols)
+                DedupPrepare.writeBucketed(merged, newName, nb, f.bucketCols,
+                  f.sortCols)
                 s.sql(s"DROP TABLE IF EXISTS $actual")
                 DedupPrepare.dropAliases(base)
                 DedupPrepare.sweepStale(s, base, keep = Set(newName))
@@ -349,7 +354,7 @@ object LayerMaintenance {
           try {
             s.conf.set(flag, "false") // scan planning happens inside the write
             DedupPrepare.writeBucketed(s.table(actual), newName,
-              f.bucketCols, f.sortCols)
+              DedupPrepare.tableBuckets(s, actual), f.bucketCols, f.sortCols)
           } finally s.conf.set(flag, prev)
           s.sql(s"DROP TABLE IF EXISTS $actual")
           DedupPrepare.dropAliases(base)
@@ -509,6 +514,7 @@ object LayerMaintenance {
       val (n, secs) = timed {
         DedupPrepare.writeBucketed(
           assigned.select(col("vec_id"), col("cell")), aT,
+          DedupPrepare.tableBuckets(s, aT),
           Seq("vec_id"), Seq("vec_id"), mode = "append")
         assigned.count()
       }
@@ -571,7 +577,8 @@ object LayerMaintenance {
         val memRows = kept.withColumn("nn2",
           call_function("grid_dot", col("embedding"), col("embedding")))
           .select(col("cell"), col("vec_id"), col("embedding"), col("nn2"))
-        DedupPrepare.writeBucketed(memRows, mT, Seq("cell"),
+        DedupPrepare.writeBucketed(memRows, mT,
+          DedupPrepare.tableBuckets(s, mT), Seq("cell"),
           Seq("cell", "vec_id"), mode = "append")
         // truncation audit, batch-stamped (doubles as the replay marker):
         // keysCapped = distinct cells where admission rejected ≥1 row

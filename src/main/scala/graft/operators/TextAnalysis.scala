@@ -1483,18 +1483,12 @@ object TextAnalysis {
     // served from the docfeats layer since r15: the only per-doc inputs
     // are (lang, non-empty token count) — the layer's n_tokens plus a
     // text-free pruned documents scan for lang; the corpus text scan +
-    // tokenize kernel are gone. Inclusion rule is the DECLARED oracle
-    // semantics (n_tokens > 0). On every oracle-checked corpus this is
-    // exactly [[ta15Legacy]]'s trim-gate (DocFeatsSpec pins ≡ there);
-    // the two diverge only on whitespace-only docs that contain
-    // non-space whitespace ("\t"), where the legacy kernel counted the
-    // split's EMPTY fields (n_ws_tokens=2 for "\t") and emitted a row
-    // its own declared oracle excludes — the layer path fixes that
-    // latent divergence (spec-pinned in DocFeatsSpec with the fixture
-    // that triggers it). Size-gated since r16
-    // ([[DedupPrepare.serveDocfeatsLayered]]); on every oracle-checked
-    // corpus the two forms are row-identical, so the gate only moves
-    // execution strategy.
+    // tokenize kernel are gone. Both forms count non-empty tokens and
+    // include a doc iff that count is > 0, the declared oracle rule, so
+    // whitespace-only docs ("\t", " \t \n ") emit no row under either
+    // form and the size gate ([[DedupPrepare.serveDocfeatsLayered]])
+    // only moves execution strategy (DocFeatsSpec pins the two forms
+    // row-identical on a corpus holding such docs).
     if (!DedupPrepare.serveDocfeatsLayered(s, dir)) return ta15Legacy(s, dir)
     val grouped = TextFeatures.docFeats(s, dir)
       .filter(col("n_tokens") > 0)
@@ -1525,20 +1519,27 @@ object TextAnalysis {
   }
 
   /** The pre-layer ta15 (text scan + text_metrics kernel per query) —
-    * parity anchor for DocFeatsSpec. Carries the legacy trim-gate
-    * inclusion rule (see [[ta15]]'s note on whitespace-only docs). */
+    * the form served below the docfeats size gate; DocFeatsSpec pins it
+    * row-identical to [[ta15]]'s layered form. */
   private[graft] def ta15Legacy(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     // token count via the compiled one-pass text_metrics kernel (the
     // ta03 lesson — the HOF filter runs an interpreted lambda per
-    // token). A blank doc splits to [""] (n_ws_tokens 1), so gate on
-    // trimmed length FIRST; for non-blank text the \s+ split emits no
-    // empties, making n_ws_tokens exactly the non-empty token count.
+    // token). The kernel splits the space-trimmed text on \s+ keeping
+    // empty EDGE fields: a blank doc yields [""], and a leading or
+    // trailing tab/newline yields a leading or trailing "" ("\t" gives
+    // ["", ""]). Interior runs never do, so subtracting the edge empties
+    // leaves exactly the oracle's non-empty token count.
+    val t = trim(col("text"))
+    def isWs(c: org.apache.spark.sql.Column) =
+      when(c.rlike("\\s"), 1L).otherwise(0L)
+    val edgeEmpties = when(length(t) === 0, 1L)
+      .otherwise(isWs(substring(t, 1, 1)) + isWs(substring(t, -1, 1)))
     val grouped = Tables.documents(s, dir)
-      .filter(length(trim(col("text"))) > 0)
       .select(col("lang"),
-        call_function("text_metrics", col("text"))
-          .getField("n_ws_tokens").cast("long").as("n_tokens"))
+        (call_function("text_metrics", col("text"))
+          .getField("n_ws_tokens").cast("long") - edgeEmpties).as("n_tokens"))
+      .filter(col("n_tokens") > 0)
       .withColumn("bucket", (length(bin(col("n_tokens"))) - 1).cast("int"))
       .groupBy(col("lang"), col("bucket"))
       .agg(count(lit(1)).as("n_docs"),

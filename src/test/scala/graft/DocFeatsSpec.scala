@@ -65,7 +65,8 @@ class DocFeatsSpec extends AnyFunSuite with SparkTestBase {
     val bodies = fixtures ++ Seq(
       "hello world hello world hello", // exact dup of fixture 6 → sig group
       "  hello world hello world hello  ", // normalizes INTO the group
-      "tail" + "x" * 6 + " appears once only zq" // singleton tokens
+      "tail" + "x" * 6 + " appears once only zq", // singleton tokens
+      "\tedge tabs split\n" // tab/newline edges: empty split fields
     )
     val docs = bodies.zipWithIndex.map { case (t, i) =>
       (i.toLong, t, "en", "u", t.length.toLong)
@@ -115,48 +116,21 @@ class DocFeatsSpec extends AnyFunSuite with SparkTestBase {
       TextAnalysis.ta16With(spark, dir, TextAnalysis.vocabLayer(spark, dir)))
   }
 
-  /** Whitespace-free edge corpus for the ta15 pin: on whitespace-ONLY
-    * docs with non-space whitespace ("\t") the LEGACY kernel counted
-    * the \s+ split's empty fields (n_ws_tokens("\t") = 2) and emitted a
-    * row the declared oracle's `n_tokens > 0` gate excludes — a latent
-    * legacy↔oracle divergence the layer path fixes (next test pins the
-    * fix); equality holds everywhere else. */
-  private lazy val dirNoWs: String = {
-    import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_docfeats_nws").toString
-    val bodies = fixtures.filter(_.exists(c => !c.isWhitespace)) ++ Seq(
-      "hello world hello world hello",
-      "tail" + "x" * 6 + " appears once only zq")
-    val docs = bodies.zipWithIndex.map { case (t, i) =>
-      (i.toLong, t, "en", "u", t.length.toLong)
-    }
-    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .repartition(3).write.parquet(s"$d/documents.parquet")
-    d
-  }
-
-  test("ta15: layer-served equals legacy on whitespace-free corpora") {
-    pinPair("ta15", TextAnalysis.ta15(spark, dirNoWs),
-      TextAnalysis.ta15Legacy(spark, dirNoWs))
-  }
-
   test("ta15 whitespace-only docs: layer path follows the declared oracle gate") {
     import org.apache.spark.sql.functions.sum
     // the edge corpus holds docs like "\t" and " \t \n " — zero
-    // non-empty tokens. The layer path excludes them (the oracle's
-    // n_tokens > 0 rule); the legacy kernel counted split empties and
-    // included them. Assert the fix and document the divergence.
-    val servedDocs = TextAnalysis.ta15(spark, dir)
-      .agg(sum("n_docs")).collect()(0).getLong(0)
-    val legacyDocs = TextAnalysis.ta15Legacy(spark, dir)
-      .agg(sum("n_docs")).collect()(0).getLong(0)
+    // non-empty tokens. Both forms exclude them (the oracle's
+    // n_tokens > 0 rule), so the size-gated dispatch cannot change rows.
+    val served = TextAnalysis.ta15(spark, dir)
+    pinPair("ta15", served, TextAnalysis.ta15Legacy(spark, dir))
     val realTokenDocs = TextFeatures.docFeats(spark, dir)
       .filter(col("n_tokens") > 0).count()
-    assert(servedDocs == realTokenDocs,
-      "layer-served ta15 must count exactly the docs with ≥1 non-empty token")
-    assert(legacyDocs > servedDocs,
-      "edge corpus no longer triggers the legacy empty-field inclusion — " +
-        "keep a whitespace-only fixture or drop this pin")
+    assert(served.agg(sum("n_docs")).collect()(0).getLong(0) == realTokenDocs,
+      "ta15 must count exactly the docs with ≥1 non-empty token")
+    assert(spark.read.parquet(s"$dir/documents.parquet")
+      .filter(col("text").contains("\t") && trim(col("text")).rlike("^\\s+$"))
+      .count() > 0,
+      "edge corpus lost its whitespace-only docs with a tab — keep one")
   }
 
   test("sf0.001 corpus: every layer-served query equals its legacy form") {

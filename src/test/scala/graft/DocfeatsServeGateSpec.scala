@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, Sampling, TextAnalysis}
+import graft.operators.{Curation, Dedup, Sampling, TextAnalysis}
 
 /** The docfeats layer-SERVING size gate (r16 — the r15 verdict's one
   * real regression cluster): each gated dispatcher (dd01/dd05,
@@ -61,19 +61,19 @@ class DocfeatsServeGateSpec extends AnyFunSuite with SparkTestBase {
       for ((name, q) <- Seq(
           "ta09" -> (() => TextAnalysis.ta09(spark, dir)),
           "ta12" -> (() => TextAnalysis.ta12(spark, dir)),
-          "sp03" -> (() => Sampling.sp03(spark, dir))))
+          "sp03" -> (() => Sampling.sp03(spark, dir)),
+          "cp04" -> (() => Curation.cp04(spark, dir))))
         assert(usesDocfeats(q()), s"$name: must stay layered")
     }
   }
 
-  test("gate closed: legacy-served rows equal the layered rows (dd01, ta15)") {
+  test("gate closed: legacy-served rows equal the layered rows (all nine)") {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.mkString("|")).sorted.toSeq
-    val (dd01Open, ta15Open) =
-      (rows(Dedup.dd01(spark, dir)), rows(TextAnalysis.ta15(spark, dir)))
+    val open = dispatchers.map { case (_, q) => rows(q()) }
     withGateClosed {
-      assert(rows(Dedup.dd01(spark, dir)) == dd01Open, "dd01 row drift")
-      assert(rows(TextAnalysis.ta15(spark, dir)) == ta15Open, "ta15 row drift")
+      for (((name, q), want) <- dispatchers.zip(open))
+        assert(rows(q()) == want, s"$name row drift")
     }
   }
 }

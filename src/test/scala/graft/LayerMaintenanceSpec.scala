@@ -151,7 +151,8 @@ class LayerMaintenanceSpec extends AnyFunSuite with SparkTestBase {
       .stripPrefix("file:"), expected)
     val dataFiles = Option(wh.listFiles()).getOrElse(Array.empty)
       .count(f => f.getName.endsWith(".parquet"))
-    assert(dataFiles <= DedupPrepare.Buckets, s"$dataFiles files after compact")
+    assert(dataFiles <= DedupPrepare.tableBuckets(spark, expected),
+      s"$dataFiles files after compact")
 
     // consumer still agrees after compaction
     assert(sortedRows(Dedup.dd03(spark, dirA)) == sortedRows(Dedup.dd03(spark, dirB)))

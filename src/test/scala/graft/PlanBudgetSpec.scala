@@ -82,7 +82,11 @@ class PlanBudgetSpec extends AnyFunSuite with SparkTestBase {
     // left-join assembly; every input is a bucketed layer read
     // (r15: 13 -> 14 — batch sigs read from docfeats instead of a text
     // scan + md5: one layer-read join more, one corpus text scan less)
-    "cp04_incremental_ingest" -> 14,
+    // (14 -> 12 when layer buckets came to match the session's shuffle
+    // partitions: the two verify-chain aggregates feeding the final
+    // left joins are already hash-partitioned like the bucketed side,
+    // so their re-shuffle to the old 32-bucket count is gone)
+    "cp04_incremental_ingest" -> 12,
     // cp05 (r9): diff of two published doc_id-bucketed manifests —
     // the version join + presentation sort, nothing corpus-derived
     // at query time
@@ -195,7 +199,7 @@ class PlanBudgetSpec extends AnyFunSuite with SparkTestBase {
     "dd11_substring_spans" -> 2,     // dup-h side outgrows broadcast -> bucketed SMJ
     "dd12_ngram_jaccard_lsh" -> 7,   // kept/denominator sides outgrow broadcast
     "dd13_shingle_containment" -> 7, // same flip as dd12 (shared gated shape)
-    "cp04_incremental_ingest" -> 16) // verify-chain sides outgrow broadcast (dd03's flip; r15 +1 = the docfeats batch-sig join, same delta as the base budget)
+    "cp04_incremental_ingest" -> 14) // verify-chain sides outgrow broadcast (dd03's flip; r15 +1 = the docfeats batch-sig join, same delta as the base budget; 16 -> 14 with the base budget's bucket-count drop)
 
   private val sf1Dir = "testdata/sf1.0"
 
@@ -221,12 +225,13 @@ class PlanBudgetSpec extends AnyFunSuite with SparkTestBase {
     // ta14 (r15 layered plan): at sf10 the bigram model outgrows the
     // head cap (biprobid > BigramHeadK rows), so the head-miss branch
     // and its backoff legs materialize (coversAll elides them at
-    // ≤sf1.0): the miss-probe join + backoff/tail branch aggs. 15 under
-    // THIS spec session's 4 shuffle partitions; a 32-thread PlanAudit
-    // census reads 14 — one bucketed-vs-shuffled join side aligns its
-    // partition count there and drops its exchange (count is partition-
-    // count-dependent for exactly this one mixed join)
-    "ta14_bigram_lm" -> 15)
+    // ≤sf1.0): the miss-probe join + backoff/tail branch aggs. 15 -> 12
+    // once layer buckets matched the 4 shuffle partitions: the per-doc
+    // aggregate over the doc_id-bucketed docfeats read keeps its
+    // partitioning (-1), and the 4-file biprobid layer's size estimate
+    // falls under the broadcast threshold (12 MB on disk vs 15 MB in 32
+    // files), so both miss-probe sort-merge joins become broadcasts (-2)
+    "ta14_bigram_lm" -> 12)
   private val sf10Dir = "testdata/sf10"
 
   test("every registered query has a budget (new queries must be budgeted)") {
