@@ -18,7 +18,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // optional comma-separated prefix filter (same semantics as Bench's
     // SPARK_GRAFT_BENCH_ONLY): lets dev loops re-check one family, and
-    // lets a big-SF verification shard the 67 queries across processes
+    // lets a big-SF verification shard the 88 queries across processes
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val selected = SparkEntry.queries.filter { case (name, _) =>

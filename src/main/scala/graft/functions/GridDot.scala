@@ -224,11 +224,6 @@ case class TokensH60(child: Expression)
 }
 
 object TokensH60 {
-  /** Same regex the SQL `split(…, '\\s+')` compiles. Retained as the
-    * reference semantics the byte walk below is fuzz-pinned against
-    * (TextKernelsSpec); no kernel hot path runs it anymore. */
-  private[functions] val Ws = java.util.regex.Pattern.compile("\\s+")
-
   /** The engine tokenizer as a reusable byte walk: all `\s+` fields of
     * `UTF8String.trim().toLowerCase()` as zero-copy byte-slice
     * UTF8Strings, Pattern.split(limit -1) field structure (leading ""

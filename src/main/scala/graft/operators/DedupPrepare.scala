@@ -316,24 +316,35 @@ object DedupPrepare {
     * SparkTestBase forces 0) can set it; the criterion is
     * scale-adaptive by construction — the sf0.1 bench stays on raw
     * files while sf1.0+/sf10 corpora cross it naturally (35 MB+
-    * single-row-group files). */
+    * single-row-group files). The same decision on `documents.parquet`
+    * also picks the docfeats serving form ([[serveDocfeatsLayered]]). */
   private val IntakeMinRgBytesDefault: Long = 16L * 1024 * 1024
   private val rgBytesCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  /** Bytes-per-row-group of one raw parquet file — the gate criterion
-    * shared by the intake AND serving decisions, memoized per file (one
-    * footer read per corpus file per JVM). */
+  /** Bytes-per-row-group of one raw parquet path — the gate criterion,
+    * memoized per path (one footer read per corpus file per JVM). The
+    * path is a single file, or a directory whenever Spark wrote the
+    * corpus (every corpus [[LayerMaintenance.ingestBatch]] appends to):
+    * bytes and row groups are then summed over its leaf parquet files,
+    * skipping `_`/`.`-prefixed entries (`_SUCCESS`, `.crc`). */
   private def rawRgBytes(s: SparkSession, dir: String, file: String): Long =
     rgBytesCache.computeIfAbsent(s"$dir/$file", _ => {
+      import org.apache.hadoop.fs.FileStatus
       val p = new org.apache.hadoop.fs.Path(s"$dir/$file")
       val conf = s.sparkContext.hadoopConfiguration
-      val bytes = p.getFileSystem(conf).getFileStatus(p).getLen
-      val rgs = {
+      val fs = p.getFileSystem(conf)
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (!st.isDirectory) Seq(st)
+        else fs.listStatus(st.getPath).toSeq.filterNot { c =>
+          val n = c.getPath.getName; n.startsWith("_") || n.startsWith(".")
+        }.flatMap(leaves)
+      val files = leaves(fs.getFileStatus(p))
+      val rgs = files.map { st =>
         val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
         try in.getRowGroups.size() finally in.close()
-      }
-      bytes / math.max(rgs, 1)
+      }.sum
+      files.map(_.getLen).sum / math.max(rgs, 1)
     })
   private[graft] def rawNeedsIntake(s: SparkSession, dir: String,
       file: String): Boolean = {
@@ -342,33 +353,24 @@ object DedupPrepare {
     minRg <= 0 || rawRgBytes(s, dir, file) >= minRg
   }
 
-  /** Docfeats layer SERVING gate (r16, the r15 verdict's one real
-    * regression cluster): r15 size-gated layer INTAKE on the measured
-    * bytes-per-row-group crossover but left layer SERVING always-on, so
-    * at tiny scale the layer-served dispatchers (dd01/dd05, ta13–ta18,
-    * sp11) paid the layers' bucket-read floor (then a fixed 32 tasks;
-    * now one task per session shuffle partition, see [[layerBuckets]])
-    * + histogram-join stages where the legacy single-pass kernel scan
-    * of a few-MB corpus is ~50 ms (sf0.1 bench, 32 cores: ta14 0.32×,
-    * ta16 0.58×, ta17 0.52× …, while the same paths win 2.6–12× at
-    * sf10). Same doctrine, same criterion, own conf: a dispatcher
-    * serves the LAYERED form iff the raw corpus file's
-    * bytes-per-row-group ≥
-    * `spark.graft.docfeats.serve.minRgBytes` (default = the intake
-    * crossover, 16 MB — once a corpus is worth ingesting it is worth
-    * serving from the layers), else the legacy (r14) form, which the
-    * DocFeatsSpec parity pins hold bit-identical. The suite and
-    * PlanAudit force 0 so every plan pin and committed dump guards the
-    * at-scale production shapes. Only the dispatchers whose legacy form
-    * is a cheap one-pass kernel scan are gated; ta09/ta12/sp03/cp04 —
-    * whose legacy forms re-tokenize per occurrence with string joins —
-    * measured faster layered at BOTH scales and stay layered always. */
+  /** Docfeats layer SERVING gate (r16): the corpus is served from the
+    * layers iff it is ingested — the intake gate above, on
+    * `documents.parquet`. Below the crossover the layer-served
+    * dispatchers (dd01/dd05, ta13–ta18, sp11) pay the layers'
+    * bucket-read floor (one task per session shuffle partition, see
+    * [[layerBuckets]]) + histogram-join stages where the legacy
+    * single-pass kernel scan of a few-MB corpus is ~50 ms (sf0.1 bench,
+    * 32 cores: ta14 0.32×, ta16 0.58×, ta17 0.52× …, while the same
+    * paths win 2.6–12× at sf10); there the dispatcher serves the legacy
+    * (r14) form, which the DocFeatsSpec parity pins hold bit-identical.
+    * The suite and PlanAudit force the gate open so every plan pin and
+    * committed dump guards the at-scale production shapes. Only the
+    * dispatchers whose legacy form is a cheap one-pass kernel scan are
+    * gated; ta09/ta12/sp03/cp04 — whose legacy forms re-tokenize per
+    * occurrence with string joins — measured faster layered at BOTH
+    * scales and stay layered always. */
   private[graft] def serveDocfeatsLayered(s: SparkSession,
-      dir: String): Boolean = {
-    val minRg = s.conf.getOption("spark.graft.docfeats.serve.minRgBytes")
-      .map(_.toLong).getOrElse(IntakeMinRgBytesDefault)
-    minRg <= 0 || rawRgBytes(s, dir, "documents.parquet") >= minRg
-  }
+      dir: String): Boolean = rawNeedsIntake(s, dir, "documents.parquet")
 
   private[graft] def intakeDocuments(s: SparkSession, dir: String): DataFrame =
     if (!rawNeedsIntake(s, dir, "documents.parquet")) Tables.documentsRaw(s, dir)

@@ -172,8 +172,9 @@ object Multimodal {
         col("n_pixels")),
       "doc_id")
 
-  /** The PRE-LAYER mm01 (per-query header decode), kept for the same-box
-    * A/B — see [[mm04Legacy]]. Not registered in [[qs]]. */
+  /** The PRE-LAYER mm01 (per-query header decode) — the parity
+    * reference MultimodalLayerSpec pins [[mm01]] against. Not
+    * registered in [[qs]]. */
   private[graft] def mm01Legacy(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val media = Tables.documents(s, dir)
@@ -214,7 +215,8 @@ object Multimodal {
         (col("p") * 10).cast("int").as("frame_idx"), col("frame_hash"))
       .transform(Present.sorted(_, "doc_id", "frame_idx"))
 
-  /** The PRE-LAYER mm02 (per-query frame md5s) — see [[mm04Legacy]]. */
+  /** The PRE-LAYER mm02 (per-query frame md5s) — parity reference for
+    * [[mm02]] (MultimodalLayerSpec). */
   private[graft] def mm02Legacy(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .withColumn("n_frames", (col("n_chars") % 240 + 1).cast("int"))
@@ -264,7 +266,8 @@ object Multimodal {
       "doc_id")
   }
 
-  /** The PRE-LAYER mm03 (per-query header decode) — see [[mm04Legacy]]. */
+  /** The PRE-LAYER mm03 (per-query header decode) — parity reference
+    * for [[mm03]] (MultimodalLayerSpec). */
   private[graft] def mm03Legacy(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val media = Tables.documents(s, dir)
@@ -670,7 +673,7 @@ object Multimodal {
   }
 
   /** Feature row from a decoded-pixel layer row + the encoder-head
-    * weights — shared by the layer serving plan and [[mm04Legacy]]. */
+    * weights. */
   private def featuresOf(r: PixelLayerRow, wEnc: Array[Long]): MediaFeatures =
     if (r.decoded == 0) {
       // unparseable payload (neither container decoded at layer-build
@@ -713,54 +716,6 @@ object Multimodal {
         (r.mn.toDouble / 255.0).toFloat, (r.mx.toDouble / 255.0).toFloat,
         (Math.floor(sig * 1e9 + 0.5) / 1e9).toFloat)
     }
-
-  /** The PRE-LAYER mm04 serving plan (decode re-run inside the query),
-    * kept for the same-box A/B that justified the decoded-pixel layer —
-    * the [[graft.operators.TextAnalysis.gateDfLegacy]] discipline:
-    * adoption evidence stays executable. Not registered in [[qs]]. */
-  private[graft] def mm04Legacy(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val wEnc = new Array[Long](EncDims)
-    encWeights(s, dir).select(col("dim"), col("w_milli")).collect()
-      .foreach(r => wEnc(r.getInt(0)) = r.getLong(1))
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("n_chars"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        it.grouped(DecodeBatch).flatMap(_.map { case (id, n) =>
-          val payload = if (id % 2 == 0) pngPixelPayload(id, n)
-                        else jpegPixelPayload(id, n)
-          val Some((w, h, ch, px)) = decodePixels(payload)
-          // metadata/frame halves unused by featuresOf — dummy them
-          val r = layerRowOf(id, w, h, ch, px,
-            MediaMeta(id, "", 0L, "", 0, 0, 0, 0L), 0, Array.empty)
-          featuresOf(r, wEnc)
-        })
-      }.toDF().transform(Present.sorted(_, "doc_id"))
-  }
-
-  /** The PRE-LAYER mm05 (decode re-run + Present.pooled); see
-    * [[mm04Legacy]]. */
-  private[graft] def mm05Legacy(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val hashes = Present.pooled(Tables.documents(s, dir)
-      .select(col("doc_id"), col("n_chars"))
-      .as[(Long, Long)]
-      .map { case (id, n) =>
-        val payload = if (id % 2 == 0) pngPixelPayload(id, n)
-                      else jpegPixelPayload(id, n)
-        val Some((w, h, ch, px)) = decodePixels(payload)
-        val (hi, lo) = dhashHalves(w, h, ch, px)
-        (id, hi, lo)
-      }.toDF("doc_id", "phash_hi", "phash_lo"))
-    val groups = hashes.groupBy(col("phash_hi"), col("phash_lo"))
-      .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("group_n"))
-    hashes.join(groups, Seq("phash_hi", "phash_lo"))
-      .select(col("doc_id"), col("phash_hi"), col("phash_lo"),
-        col("keeper_id"), col("group_n"),
-        (col("doc_id") =!= col("keeper_id")).cast("int").as("is_dup"))
-      .orderBy("doc_id")
-  }
 
   /** Closed-form decoded-JPEG component value of pixel (x, y): the
     * fixture's per-block DC formula at block coords (x//8, y//8). */

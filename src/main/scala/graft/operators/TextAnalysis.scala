@@ -458,8 +458,8 @@ object TextAnalysis {
 
   /** The RETIRED three-kernel gate program (text_metrics + stop_hits +
     * ngram_stats, each a full tokenize pass) — kept as the parity
-    * oracle for [[gateDf]]'s fused gate_stats form (TextKernelsSpec)
-    * and for the same-box A/B (tools/GateAb). Not on any query path. */
+    * oracle for [[gateDf]]'s fused gate_stats form (TextKernelsSpec).
+    * Not on any query path. */
   private[graft] def gateDfLegacy(docs: DataFrame): DataFrame = {
     val nTok = col("tm.n_ws_tokens").cast("double")
     val punct = col("tm.n_punct").cast("double")

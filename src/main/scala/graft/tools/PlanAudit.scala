@@ -88,14 +88,10 @@ object PlanAudit {
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       // census the production plan shapes: force the corpus intake
-      // layers ON (same rationale as SparkTestBase — the budgets pin
-      // the at-scale shapes, not the tiny-corpus raw-file fallback)
+      // layers, and with them docfeats serving, ON (same rationale as
+      // SparkTestBase — the budgets pin the at-scale shapes, not the
+      // tiny-corpus raw-file / legacy-dispatch fallback)
       .config("spark.graft.intake.minRgBytes", "0")
-      // ... and the docfeats SERVING gate (r16) for the same reason;
-      // env-overridable so the round's plan dumps can also capture the
-      // below-crossover LEGACY dispatch (pass a huge value to close it)
-      .config("spark.graft.docfeats.serve.minRgBytes",
-        sys.env.getOrElse("SPARK_GRAFT_PLAN_SERVE_MINRG", "0"))
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // same env override as Bench: plan census at other scale factors

@@ -21,12 +21,11 @@ object SparkTestBase {
       // size: the suite pins the AT-SCALE (production) plan shapes —
       // the runtime size gate (DedupPrepare.rawNeedsIntake) would
       // otherwise serve the tiny test corpora raw and the pins would
-      // stop guarding the shapes that actually run at sf1.0/sf10
+      // stop guarding the shapes that actually run at sf1.0/sf10. The
+      // same gate picks docfeats layer SERVING, so the suite also pins
+      // the layered dispatch; specs that pin the LEGACY dispatch set
+      // the conf high (or unset it) locally and restore it
       .config("spark.graft.intake.minRgBytes", "0")
-      // same doctrine for docfeats layer SERVING (r16): the suite pins
-      // the layered (production) dispatch; specs that pin the LEGACY
-      // dispatch set the conf high locally and restore it
-      .config("spark.graft.docfeats.serve.minRgBytes", "0")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
