@@ -96,7 +96,6 @@ object DiagReport {
     * dataset_size.{ks}.{tbl}.size + total, warnings.{cat}.{check}[…].
     */
   def summaryJson(tabs: Tabs): String = {
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     def jnum(d: Double) =
       if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) d.toLong.toString
       else d.toString
@@ -125,9 +124,9 @@ object DiagReport {
             s""""write":{"write_req":${jnum(v)},"avg_tps":${d("write_tps")},"perc_write":${d("perc_write")},"perc_rw":${d("write_perc_rw")}}""")
           read.toSeq ++ write.toSeq
         }
-        s"${jstr(tbl)}:{${blocks.mkString(",")}}"
+        s"${Json.quote(tbl)}:{${blocks.mkString(",")}}"
       }.mkString(",")
-      s"${jstr(ks)}:{$entries}"
+      s"${Json.quote(ks)}:{$entries}"
     }
     def sumOf(col: String) =
       wl.map(r => Option(r.getAs[Any](col)).map(_.toString.toDouble).getOrElse(0.0)).sum
@@ -139,9 +138,9 @@ object DiagReport {
       val entries = tbls.map(_._2).distinct.sorted.map { tbl =>
         val size = wlByTbl.get((ks, tbl)).flatMap(r => opt(r, "size_bytes"))
           .map(sz => s""""size":${jnum(sz)}""").getOrElse("")
-        s"${jstr(tbl)}:{$size}"
+        s"${Json.quote(tbl)}:{$size}"
       }.mkString(",")
-      s"${jstr(ks)}:{$entries}"
+      s"${Json.quote(ks)}:{$entries}"
     }
     val totalSize = am.sizeBytes
 
@@ -165,10 +164,10 @@ object DiagReport {
         (byCheck.keySet ++ alwaysChecks.getOrElse(cat, Nil)).toSeq.sorted
       val checks = checkNames.map { check =>
         val msgs = byCheck.getOrElse(check, Array.empty[Row])
-        s"${jstr(check)}:[" +
-          msgs.map(m => jstr(m.getAs[String]("message"))).sorted.mkString(",") + "]"
+        s"${Json.quote(check)}:[" +
+          msgs.map(m => Json.quote(m.getAs[String]("message"))).sorted.mkString(",") + "]"
       }.mkString(",")
-      s"${jstr(cat)}:{$checks}"
+      s"${Json.quote(cat)}:{$checks}"
     }.mkString(",")
 
     val wlEntries = (workload ++ Seq(
@@ -195,7 +194,7 @@ object DiagReport {
     // down nodes contributing 0 — GoldenReferenceSpec pins both.
     // `cluster` and `astra_metrics` are additive keys (no reference
     // counterpart; metrics live in its xlsx as Excel formulas).
-    s"""{"cluster":${jstr(tabs.clusterName)},"workload":{$wlEntries},""" +
+    s"""{"cluster":${Json.quote(tabs.clusterName)},"workload":{$wlEntries},""" +
       s""""dataset_size":{$dsEntries},""" +
       s""""astra_metrics":{$metrics},""" +
       s""""avg_uptime":${am.avgUptimeSec},""" +

@@ -70,7 +70,8 @@ object Tables {
     * kernel above it — ran in ONE task while 31 cores idled; this was
     * the invisible floor under the whole map-side query family. Intake
     * rewrites the table once per corpus fingerprint into the engine's
-    * own layout (32 doc_id/vec_id buckets, one file each): scans
+    * own layout (doc_id/vec_id buckets, one per session shuffle
+    * partition — `DedupPrepare.layerBuckets` — one file each): scans
     * parallelize, and every doc_id- or vec_id-keyed join/groupBy
     * downstream is co-bucketed with the other layers. This is ingest —
     * the move-the-bytes-once step a 100 TB deployment performs on

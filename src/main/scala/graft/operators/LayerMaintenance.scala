@@ -128,6 +128,13 @@ object LayerMaintenance {
       .find(n => pat.findFirstIn(n).isDefined)
   }
 
+  /** `body`'s result and its wall seconds, for the per-layer report. */
+  private def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
   /** Absorb an ingested batch into the standing corpus's maintained
     * layers at batch cost. Call AFTER the batch's files are written into
     * `<dir>/documents.parquet` (so the corpus fingerprint has moved on),
@@ -179,12 +186,6 @@ object LayerMaintenance {
     // batch-sized delta relations; the shingle explode is shared by
     // three families, so materialize it once for the ingest
     val deltaShingles = Present.pooled(Dedup.wordShingles(batch, 3))
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
 
     val report = specs.map { case (f, base, newName, existing) =>
       existing match {
@@ -453,11 +454,6 @@ object LayerMaintenance {
       ivf: (String, String, String, Int)): Seq[LayerDelta] = {
     val (aT, cT, mT, kOld) = ivf
     val cap = Dedup.BucketCap
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
     def assignMax: Option[Long] = {
       val r = s.table(aT).agg(max(col("vec_id"))).head()
       if (r.isNullAt(0)) None else Some(r.getLong(0))
@@ -624,21 +620,6 @@ object LayerMaintenance {
     b.result()
   }
 
-  /** Standing max vec_id of an embeddings corpus (footer-stats read,
-    * like [[maxDocId]]). */
-  private def maxVecId(s: SparkSession, path: String): Long = {
-    val flag = "spark.sql.parquet.aggregatePushdown"
-    val prev = s.conf.getOption(flag)
-    try {
-      s.conf.set(flag, "true")
-      val r = s.read.parquet(path).agg(max(col("vec_id"))).head()
-      if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-    } finally prev match {
-      case Some(v) => s.conf.set(flag, v)
-      case None    => s.conf.unset(flag)
-    }
-  }
-
   /** One micro-batch of the vector ingest loop — [[ingestBatch]]'s twin
     * for the embeddings corpus: append the arrivals into
     * `<dir>/embeddings.parquet` (exactly-once under at-least-once
@@ -654,7 +635,7 @@ object LayerMaintenance {
       if (mm.isNullAt(0)) Nil
       else {
         val (bMin, bMax) = (mm.getLong(0), mm.getLong(1))
-        val corpusMax = maxVecId(s, s"$dir/embeddings.parquet")
+        val corpusMax = maxId(s, s"$dir/embeddings.parquet", "vec_id")
         if (corpusMax >= bMax)
           appendIngestVectors(s, dir, arrivals, replay = true)
         else if (corpusMax >= bMin)
@@ -727,7 +708,7 @@ object LayerMaintenance {
       if (mm.isNullAt(0)) Nil // nothing survived the gate
       else {
         val (bMin, bMax) = (mm.getLong(0), mm.getLong(1))
-        val corpusMax = maxDocId(s, s"$dir/documents.parquet")
+        val corpusMax = maxId(s, s"$dir/documents.parquet", "doc_id")
         if (corpusMax >= bMax) appendIngest(s, dir, accepted, replay = true)
         else if (corpusMax >= bMin)
           sys.error(s"ingestBatch: batch id range [$bMin,$bMax] partially " +
@@ -741,16 +722,16 @@ object LayerMaintenance {
     } finally accepted.unpersist(blocking = false)
   }
 
-  /** Standing max doc_id of a corpus directory, or Long.MinValue when
-    * empty. Read with parquet aggregate pushdown so the MAX resolves
-    * from file-footer statistics — per-micro-batch cost is a metadata
-    * pass, not a corpus scan. */
-  private def maxDocId(s: SparkSession, path: String): Long = {
+  /** Standing max `idCol` (doc_id / vec_id) of a corpus table, or
+    * Long.MinValue when empty. Read with parquet aggregate pushdown so
+    * the MAX resolves from file-footer statistics — per-micro-batch cost
+    * is a metadata pass, not a corpus scan. */
+  private def maxId(s: SparkSession, path: String, idCol: String): Long = {
     val flag = "spark.sql.parquet.aggregatePushdown"
     val prev = s.conf.getOption(flag)
     try {
       s.conf.set(flag, "true")
-      val r = s.read.parquet(path).agg(max(col("doc_id"))).head()
+      val r = s.read.parquet(path).agg(max(col(idCol))).head()
       if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
     } finally prev match {
       case Some(v) => s.conf.set(flag, v)

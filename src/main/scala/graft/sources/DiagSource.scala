@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.parse.Parsers
@@ -14,12 +14,12 @@ import java.util.zip.ZipInputStream
   * `<root>/nodes/<node-dir>/…` (SURVEY.md §2.1; layout per reference
   * README.md:119-146).
   *
-  * Reading strategy: each file is read *whole* (`wholetext`) so a file's
-  * lines stay in one task in order — the stateful parsers in graft.parse
-  * then run per file inside `flatMap`/`mapPartitions`, and per-file state
-  * never crosses partitions (SURVEY.md §7.5). Diag files are small (MBs);
-  * skew is bounded. Node identity is recovered from the file path, the
-  * `input_file_name` pattern.
+  * Reading strategy: every file is read *whole* by one `binaryFile`
+  * scan, so a file's lines stay in one task in order — the stateful
+  * parsers in graft.parse then run per file inside `map`/`flatMap`, and
+  * per-file state never crosses partitions (SURVEY.md §7.5). Diag files
+  * are small (MBs); skew is bounded. Node identity is an exact lookup of
+  * the scan's `path` column in the index listing.
   *
   * Discovery (listing node dirs) uses the Hadoop FileSystem API, so the
   * same code serves file:// and s3a:// roots; listing is driver-side
@@ -34,7 +34,7 @@ object DiagSource {
     * `listFiles` over `<root>/nodes` (+ one over `<root>/AdditionalLogs`)
     * captures every (node, rel → path) fact; all discovery below is then
     * O(1) map lookups, and path→node resolution in executors is an exact
-    * hash lookup on the scheme-normalized URI path, broadcast once.
+    * lookup of the listed path.
     */
   final case class DiagIndex(
       nodes: Seq[String],
@@ -52,7 +52,7 @@ object DiagSource {
           !rel.stripPrefix("logs/cassandra/").contains("/") => (n, p)
       }
       (inTree ++ addLogs).sorted.map { case (n, p) =>
-        (n, p, p.endsWith(".zip"))
+        (n, p, isZip(p))
       }
     }
   }
@@ -60,9 +60,9 @@ object DiagSource {
   private val indexCache =
     scala.collection.concurrent.TrieMap.empty[String, DiagIndex]
 
-  /** Strip the scheme so listed paths ("file:/a/b") and
-    * `input_file_name` values ("file:///a/b") meet on one key. */
-  private[sources] def uriPath(p: String): String = new Path(p).toUri.getPath
+  /** Strip the scheme so a listed child ("file:/a/b") and the qualified
+    * sweep base meet on one prefix. */
+  private def uriPath(p: String): String = new Path(p).toUri.getPath
 
   private def sweep(spark: SparkSession, base: Path): Seq[(String, String)] = {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -122,26 +122,39 @@ object DiagSource {
   def nodeDirs(spark: SparkSession, root: String): Seq[String] =
     index(spark, root).nodes
 
-  /** path→node resolution as a PURE CATALYST expression (no black-box
-    * Scala `udf` — r4 verdict hygiene #1): `input_file_name()` yields
-    * the url-ENCODED file URI (`SparkPath.urlEncoded`, e.g.
-    * `file:///a/x%20y`), while our index stored the listing's
-    * `Path.toString` (`file:/a/x y` — authority form and encoding both
-    * differ). The two meet on the scheme-and-authority-stripped
-    * ENCODED path: driver-side via `Path.toUri.getRawPath`, expression
-    * -side via one `regexp_replace` — both encodings come from the
-    * same Hadoop URI machinery, so the bytes agree (the encoded-space
-    * dual of the old `uriPath` UDF, without the closure). A map
-    * LITERAL + `try_element_at` stays inside whole-stage codegen and
-    * is plan-visible; the map is file-count-sized (same footprint the
-    * broadcast had). `fallback` fires only if an engine version ever
-    * changes the encoding contract. */
-  private def nodeByFile(paths: Seq[(String, String)], fallback: Column): Column = {
-    val byEnc = paths.map { case (n, p) =>
-      new Path(p).toUri.getRawPath -> n }.toMap
-    val encPath = regexp_replace(input_file_name(),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "")
-    coalesce(try_element_at(typedlit(byEnc), encPath), fallback)
+  /** Rotated logs may be zipped (explore.py:311-316). */
+  private def isZip(path: String): Boolean = path.endsWith(".zip")
+
+  /** The lines of one diag file: the first member of a `.zip`, like the
+    * reference (explore.py:313), else the file itself — UTF-8 either way. */
+  private def lines(path: String, bytes: Array[Byte]): Iterator[String] = {
+    val raw = new java.io.ByteArrayInputStream(bytes)
+    val in =
+      if (!isZip(path)) raw
+      else {
+        val zis = new ZipInputStream(raw)
+        if (zis.getNextEntry == null) return Iterator.empty
+        zis
+      }
+    val br = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+    Iterator.continually(br.readLine()).takeWhile(_ != null)
+  }
+
+  /** (node, path, bytes) for listed (node, path) files, in one
+    * `binaryFile` scan. The scan's `path` is the listing's
+    * `Path.toString` byte for byte, so the node is an exact map-literal
+    * lookup (plan-visible, inside codegen); a path the index did not
+    * list fails the job rather than yield a null node. */
+  private def read(spark: SparkSession, files: Seq[(String, String)])
+      : Dataset[(String, String, Array[Byte])] = {
+    import spark.implicits._
+    val nodeOf = typedlit(files.map(_.swap).toMap)
+    spark.read.format("binaryFile").load(files.map(_._2): _*)
+      .select(
+        coalesce(try_element_at(nodeOf, col("path")),
+          raise_error(concat(lit("diag file not in the index: "), col("path")))),
+        col("path"), col("content"))
+      .as[(String, String, Array[Byte])]
   }
 
   /** (nodeDir, content) for every node's `<rel>` file that exists. */
@@ -150,14 +163,12 @@ object DiagSource {
     val paths = index(spark, root).forRel(rel)
     if (paths.isEmpty)
       return spark.emptyDataset[(String, String)].toDF("node_dir", "content")
-    spark.read.option("wholetext", "true")
-      .text(paths.map(_._2): _*)
-      .select(
-        // fallback = parent-of-parent path segment: the node dir, by
-        // the <root>/nodes/<node>/<tool>/<file> layout
-        nodeByFile(paths, try_url_decode(
-          try_element_at(split(input_file_name(), "/"), lit(-3)))).as("node_dir"),
-        col("value").as("content"))
+    read(spark, paths)
+      // every line "\n"-terminated: `content.linesIterator` then yields
+      // exactly the file's lines, a trailing blank one included
+      .map { case (node, path, bytes) =>
+        (node, lines(path, bytes).map(_ + "\n").mkString) }
+      .toDF("node_dir", "content")
   }
 
   /** Whole content of one file, read driver-side (used only for the
@@ -296,53 +307,16 @@ object DiagSource {
   def logEvents(spark: SparkSession, root: String, tpTs: Long)
       : (Dataset[GcEvent], Dataset[TombstoneEvent]) = {
     import spark.implicits._
-    // (node, path, isZip) for all system* log files — from the one sweep
-    val files: Seq[(String, String, Boolean)] = index(spark, root).logFiles
+    val files = index(spark, root).logFiles
     if (files.isEmpty)
       return (spark.emptyDataset[GcEvent], spark.emptyDataset[TombstoneEvent])
-
-    val plain = files.filter(!_._3).map(f => (f._1, f._2))
-    val zipped = files.filter(_._3).map(f => (f._1, f._2))
-
-    val plainEvents: Dataset[(Seq[GcEvent], Seq[TombstoneEvent])] =
-      if (plain.isEmpty) spark.emptyDataset[(Seq[GcEvent], Seq[TombstoneEvent])]
-      else {
-        spark.read.option("wholetext", "true").text(plain.map(_._2): _*)
-          .select(nodeByFile(plain, lit("")).as("node"), col("value"))
-          .as[(String, String)]
-          .map { case (node, content) =>
-            val ev = Parsers.parseLog(node, content.linesIterator, tpTs)
-            (ev.gc, ev.tombstones)
-          }
-      }
-
-    val zipEvents: Dataset[(Seq[GcEvent], Seq[TombstoneEvent])] =
-      if (zipped.isEmpty) spark.emptyDataset[(Seq[GcEvent], Seq[TombstoneEvent])]
-      else {
-        val bc = spark.sparkContext.broadcast(
-          zipped.map { case (n, p) => (uriPath(p), n) }.toMap)
-        spark.read.format("binaryFile").load(zipped.map(_._2): _*)
-          .select(col("path"), col("content"))
-          .as[(String, Array[Byte])]
-          .map { case (path, bytes) =>
-            val node = bc.value.getOrElse(uriPath(path), "")
-            // first zip member only, like the reference (explore.py:313)
-            val zis = new ZipInputStream(new java.io.ByteArrayInputStream(bytes))
-            val entry = zis.getNextEntry
-            if (entry == null) (Seq.empty[GcEvent], Seq.empty[TombstoneEvent])
-            else {
-              val br = new BufferedReader(
-                new InputStreamReader(zis, StandardCharsets.UTF_8))
-              val lines = Iterator.continually(br.readLine()).takeWhile(_ != null)
-              val ev = Parsers.parseLog(node, lines, tpTs)
-              (ev.gc, ev.tombstones)
-            }
-          }
-      }
-
     // persisted: both event streams fan out of one parse pass
     // (the reference re-reads the file instead — SURVEY.md §4)
-    val all = plainEvents.union(zipEvents)
+    val all = read(spark, files.map(f => (f._1, f._2)))
+      .map { case (node, path, bytes) =>
+        val ev = Parsers.parseLog(node, lines(path, bytes), tpTs)
+        (ev.gc, ev.tombstones)
+      }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (all.flatMap(_._1), all.flatMap(_._2))
   }

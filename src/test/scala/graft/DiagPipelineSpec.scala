@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -347,5 +347,43 @@ class DiagPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(math.abs(am.get("read_tpmo").asDouble() - tps * 60 * 60 * 24 * 365.25 / 12) < 1e-6)
     // 5 status nodes: 86400×2 + 43200×2 + 0 (down node) over 5
     assert(am.get("avg_uptime_sec").asDouble() == (86400.0 * 2 + 43200 * 2) / 5)
+  }
+
+  test("summary.json: a control character in a name stays valid JSON") {
+    val json = DiagReport.summaryJson(tabs.copy(clusterName = "Test\u0007Cluster"))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.get("cluster").asText() == "Test\u0007Cluster")
+  }
+
+  test("diag root under a space and a '%': same tabs and summary as the plain path") {
+    val src = Paths.get("src/test/resources/diag_mini")
+    val root = Files.createTempDirectory("graft diag %41 x").resolve("diag %20 mini")
+    Files.walk(src).iterator().asScala.foreach { p =>
+      val to = root.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    }
+    val t2 = DiagReport.analyze(spark, root.toString)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    Seq[DiagReport.Tabs => DataFrame](_.nodeTable, _.workload, _.gc, _.tombstones,
+      _.thresholds, _.warnings, _.proxyHist, _.seenTables)
+      .foreach(tab => assert(rows(tab(t2)) == rows(tab(tabs))))
+    assert(DiagReport.summaryJson(t2) == DiagReport.summaryJson(tabs))
+  }
+
+  test("a CRLF system.log yields the same GC and tombstone events as LF") {
+    import graft.sources.DiagSource
+    val log = Files.readAllLines(Paths.get(
+      "src/test/resources/diag_mini/nodes/10_0_0_1/logs/cassandra/system.log")).asScala
+    def events(eol: String) = {
+      val root = Files.createTempDirectory("graft_eol")
+      val dir = root.resolve("nodes/10.0.0.1/logs/cassandra")
+      Files.createDirectories(dir)
+      Files.write(dir.resolve("system.log"), log.map(_ + eol).mkString.getBytes("UTF-8"))
+      val (gc, ts) = DiagSource.logEvents(spark, root.toString, 0L)
+      (gc.collect().toSeq.sortBy(_.toString), ts.collect().toSeq.sortBy(_.toString))
+    }
+    val lf = events("\n")
+    assert(lf._1.nonEmpty && lf._2.nonEmpty)
+    assert(events("\r\n") == lf)
   }
 }

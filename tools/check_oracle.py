@@ -11,102 +11,29 @@ coercion used to mask exactly that. Values are compared as exact
 Python objects (ints never coerced to float, so >2^53 hash columns
 can't silently collide).
 
+The per-query comparison is check_oracle_par.check_one, run once per
+query in order; check_oracle_par.py shards the same call across
+processes for big scale factors.
+
 Usage:
   python3 tools/check_oracle.py /tmp/verify_out /root/testdata/sf0.01
 This is a builder-side dev tool only (driver-side python env), not part
 of the Scala library.
 """
-import datetime
 import json
-import math
 import sys
 
-import duckdb
-import pyarrow.parquet as pq
+from check_oracle_par import check_one
 
 out_dir, sf_dir = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
-for t in ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]:
-    con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-
-def norm_type(t) -> str:
-    """Normalize representation-only Arrow type differences that the
-    engines cannot agree on byte-for-byte (string vs large_string,
-    timestamp unit/tz encoding); everything else — including integer
-    width and decimal-vs-integer — must match exactly."""
-    s = str(t)
-    if s.startswith("timestamp"):
-        return "timestamp"
-    if s in ("large_string", "string"):
-        return "string"
-    if s in ("large_binary", "binary"):
-        return "binary"
-    for p in ("large_list<", "list<"):
-        if s.startswith(p):
-            return "list<" + norm_type(s[len(p):-1].split(": ", 1)[-1]) + ">"
-    return s
-
-
-def norm_val(x):
-    if isinstance(x, datetime.datetime):
-        if x.tzinfo is not None:
-            x = x.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        return x
-    return x
-
-
-def val_eq(x, y) -> bool:
-    x, y = norm_val(x), norm_val(y)
-    if x is None or y is None:
-        return x is None and y is None
-    if isinstance(x, float) or isinstance(y, float):
-        if isinstance(x, float) and isinstance(y, float) \
-                and math.isnan(x) and math.isnan(y):
-            return True
-        return x == y  # exact — the engines are expected to agree bitwise
-    if isinstance(x, list) and isinstance(y, list):
-        return len(x) == len(y) and all(val_eq(a, b) for a, b in zip(x, y))
-    return x == y
-
-
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fails = 0
 for name, sql in sorted(oracle.items()):
-    try:
-        got = pq.read_table(f"{out_dir}/{name}")
-        exp = con.sql(sql).arrow()
-    except Exception as e:  # noqa: BLE001
-        print(f"FAIL  {name}: {type(e).__name__}: {e}")
-        fails += 1
-        continue
-    gcols, ecols = sorted(got.column_names), sorted(exp.column_names)
-    if gcols != ecols:
-        print(f"FAIL  {name}: columns {gcols} != {ecols}")
-        fails += 1
-        continue
-    if got.num_rows != exp.num_rows:
-        print(f"FAIL  {name}: rows {got.num_rows} != {exp.num_rows}")
-        fails += 1
-        continue
-    bad = []
-    for c in gcols:
-        gt = norm_type(got.schema.field(c).type)
-        et = norm_type(exp.schema.field(c).type)
-        if gt != et:
-            bad.append((c, f"TYPE {got.schema.field(c).type} != "
-                           f"{exp.schema.field(c).type}"))
-            continue
-        ga, ea = got.column(c).to_pylist(), exp.column(c).to_pylist()
-        for i, (x, y) in enumerate(zip(ga, ea)):
-            if not val_eq(x, y):
-                bad.append((c, f"row {i}: {x!r} != {y!r}"))
-                break
-    if bad:
-        print(f"FAIL  {name}: {bad[:3]}")
-        fails += 1
+    _, rec, _ = check_one((name, sql, out_dir, sf_dir))
+    if rec["hash_match"]:
+        print(f"OK    {name} ({rec['spark_rows']} rows)")
     else:
-        print(f"OK    {name} ({got.num_rows} rows)")
+        print(f"FAIL  {name}: {rec['err']}")
+        fails += 1
 print(f"\n{len(oracle) - fails}/{len(oracle)} queries match")
 sys.exit(1 if fails else 0)

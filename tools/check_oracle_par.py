@@ -4,10 +4,10 @@ per-query DuckDB oracle comparisons across N worker processes (each
 with its own DuckDB connection over the same parquet views) and writes
 a driver-CORRECTNESS-style JSON artifact.
 
-The comparison logic is identical to check_oracle.py (exact values,
-Arrow-schema types, sorted column names); only the scheduling differs —
-the sf1.0 pass is dominated by independent DuckDB query wall time, so
-query-level sharding is embarrassingly parallel.
+check_one is THE comparison (exact values, Arrow-schema types, sorted
+column names); check_oracle.py calls it once per query in order, this
+tool shards it — the sf1.0 pass is dominated by independent DuckDB
+query wall time, so query-level sharding is embarrassingly parallel.
 
 Usage:
   python3 tools/check_oracle_par.py <out_dir> <sf_dir> <nprocs> [artifact.json]
@@ -27,6 +27,10 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 
 def norm_type(t) -> str:
+    """Normalize representation-only Arrow type differences that the
+    engines cannot agree on byte-for-byte (string vs large_string,
+    timestamp unit/tz encoding); everything else — including integer
+    width and decimal-vs-integer — must match exactly."""
     s = str(t)
     if s.startswith("timestamp"):
         return "timestamp"
@@ -56,7 +60,7 @@ def val_eq(x, y) -> bool:
         if isinstance(x, float) and isinstance(y, float) \
                 and math.isnan(x) and math.isnan(y):
             return True
-        return x == y
+        return x == y  # exact — the engines are expected to agree bitwise
     if isinstance(x, list) and isinstance(y, list):
         return len(x) == len(y) and all(val_eq(a, b) for a, b in zip(x, y))
     return x == y
