@@ -2,20 +2,24 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.model._
 import graft.operators.DiagAnalysis
 import graft.sources.DiagSource
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end diag pipeline (the reference's E1, SURVEY.md §3): parse a
   * diagnostic tree, run the analysis layer, emit per-tab parquet and the
   * nested `summary.json` (ref explore.py:578-586, 1718-1790, 1851-1854).
   *
-  * The per-tab relations are written distributed; only the final
-  * summary assembly collects — it is the sink, and by then every
-  * relation has been reduced to report-sized aggregates (≤ thousands of
-  * rows). usage: DiagReport <diagRoot> <outDir>
+  * The analysis runs distributed and reduces every relation to a
+  * report-sized tab (≤ thousands of rows). `analyze` then collects each
+  * tab once, all tabs concurrently, and hands the sinks local relations
+  * of those rows, so no sink re-runs the analysis.
+  * usage: DiagReport <diagRoot> <outDir>
   */
 object DiagReport {
 
@@ -35,24 +39,24 @@ object DiagReport {
     import spark.implicits._
     val status = DiagSource.status(spark, root)
     val gossip = DiagSource.gossip(spark, root)
-    val info = DiagSource.nodeInfo(spark, root)
+    // the node dimension, read once: every tab query joins these rows
+    val info = local(spark, DiagSource.nodeInfo(spark, root))
     val cluster = DiagSource.clusterName(spark, root)
     val ossVer = DiagSource.ossVersion(spark, root)
-    val dcs = status.toDF().select("dc").distinct().as[String].collect().toSeq.sorted
+    val statusRows = status.collect()
+    val dcs = statusRows.map(_.dc).distinct.sorted.toSeq
     val catalog = DiagSource.schema(spark, root, dcs)
     val rf = spark.createDataset(catalog.rf)
-    val metrics = DiagSource.cfstats(spark, root)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (gcEv, tsEv) = DiagSource.logEvents(spark, root, tp.tpTs)
+    val metrics = DiagSource.cfstats(spark, root).persist(StorageLevel.MEMORY_AND_DISK)
+    val logs = DiagSource.parsedLogs(spark, root, tp.tpTs)
+    val gcEv = logs.flatMap(_._1)
+    val tsEv = logs.flatMap(_._2)
     val nodeDc = info.select(col("node_dir").as("node"), col("dc"))
 
-    val statusIps = status.collect().map(_.ip).toSet
-    val dirIp = {
-      import spark.implicits._
-      DiagSource.nodeIpMap(spark, root, statusIps).toSeq.toDF("node_dir", "ip")
-    }
+    val dirIp = DiagSource.nodeIpMap(spark, root, statusRows.map(_.ip).toSet)
+      .toSeq.toDF("node_dir", "ip")
     val gcPct = DiagAnalysis.gcPercentiles(gcEv, nodeDc, cluster)
-    Tabs(
+    try collected(spark, Tabs(
       nodeTable = DiagAnalysis.nodeTable(status, gossip, info, ossVer, dirIp),
       workload = DiagAnalysis.workload(metrics, rf, info, inclSys),
       gc = gcPct,
@@ -65,7 +69,45 @@ object DiagReport {
         .orderBy("category", "check", "message"),
       proxyHist = DiagAnalysis.proxyHistTab(DiagSource.proxyHist(spark, root), nodeDc),
       clusterName = cluster,
-      seenTables = DiagAnalysis.seenTables(metrics, inclSys))
+      seenTables = DiagAnalysis.seenTables(metrics, inclSys)))
+    finally {
+      metrics.unpersist()
+      logs.unpersist()
+    }
+  }
+
+  /** `df`'s rows, collected once, as a local relation. */
+  private def local(spark: SparkSession, df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
+  /** `tabs` with every relation collected once, concurrently, into a
+    * local relation. Each relation gets its own thread, so the queries'
+    * driver-side planning and codegen overlap as well as their jobs. The
+    * pool is made here, so its threads inherit the caller's Spark job
+    * group and local properties. A failed collect rethrows its own
+    * exception, and no pool thread outlives the call. */
+  private[graft] def collected(spark: SparkSession, tabs: Tabs): Tabs = {
+    val dfs = Seq(tabs.nodeTable, tabs.workload, tabs.gc, tabs.tombstones,
+      tabs.thresholds, tabs.warnings, tabs.proxyHist, tabs.seenTables)
+    val pool = Executors.newFixedThreadPool(dfs.size, { (r: Runnable) =>
+      val t = new Thread(r, "diag-collect")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val pending = dfs.map(df => pool.submit(() => local(spark, df)))
+      val Seq(nodeTable, workload, gc, tombstones, thresholds, warnings,
+        proxyHist, seenTables) = pending.map { f =>
+        try f.get()
+        catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
+      }
+      tabs.copy(nodeTable = nodeTable, workload = workload, gc = gc,
+        tombstones = tombstones, thresholds = thresholds, warnings = warnings,
+        proxyHist = proxyHist, seenTables = seenTables)
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
   }
 
   /** Engine-computed Astra Metrics (the reference leaves these to Excel
@@ -204,29 +246,23 @@ object DiagReport {
   /** Write one cluster's tabs + summary under `outDir`. The node tab is
     * gated on having any status data (the reference's `exclude_tab`,
     * explore.py:305-306: a diag with no nodetool/status drops the tab
-    * rather than emitting a zero-row one). */
+    * rather than emitting a zero-row one). Each tab feeds up to three
+    * sinks (parquet, summary.json, the CSV workbook) plus that gate;
+    * `analyze` hands them local relations, so the gate and the sinks'
+    * collects read rows without running a job. */
   def write(tabs: Tabs, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
-    // each tab feeds up to three sinks (parquet, summary.json, the CSV
-    // workbook) plus the node-tab gate — persist the report-sized
-    // relations so the diag-tree analysis DAG runs once per tab, not
-    // once per sink
-    val cached = Seq(tabs.nodeTable, tabs.workload, tabs.gc, tabs.tombstones,
-      tabs.thresholds, tabs.warnings, tabs.proxyHist)
-    cached.foreach(_.persist())
-    try {
-      (Seq(
-        "workload" -> tabs.workload,
-        "gc_pauses" -> tabs.gc, "tombstones" -> tabs.tombstones,
-        "threshold_tabs" -> tabs.thresholds, "warnings" -> tabs.warnings,
-        "proxy_histograms" -> tabs.proxyHist
-      ) ++ (if (tabs.nodeTable.isEmpty) Nil else Seq("node_table" -> tabs.nodeTable))
-      ).foreach { case (name, df) =>
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      }
-      Files.writeString(Paths.get(s"$outDir/summary.json"), summaryJson(tabs))
-      DiagWorkbook.write(tabs, outDir)
-    } finally cached.foreach(_.unpersist())
+    (Seq(
+      "workload" -> tabs.workload,
+      "gc_pauses" -> tabs.gc, "tombstones" -> tabs.tombstones,
+      "threshold_tabs" -> tabs.thresholds, "warnings" -> tabs.warnings,
+      "proxy_histograms" -> tabs.proxyHist
+    ) ++ (if (tabs.nodeTable.isEmpty) Nil else Seq("node_table" -> tabs.nodeTable))
+    ).foreach { case (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }
+    Files.writeString(Paths.get(s"$outDir/summary.json"), summaryJson(tabs))
+    DiagWorkbook.write(tabs, outDir)
   }
 
   /** Parse the reference's `-tp_*` threshold flags (explore.py:140-171),
@@ -316,8 +352,6 @@ object DiagReport {
           d
         }
       write(tabs, dest)
-      // release the per-root persisted metrics before the next cluster
-      spark.catalog.clearCache()
       dest
     }
   }

@@ -12,8 +12,10 @@ import java.nio.file.{Files, Paths}
   * have no CSV counterpart. Side-by-side block layouts (Workload,
   * Proxihistogram) are reproduced, including the empty separator column.
   *
-  * Every tab is report-sized (post-aggregation) by construction, so the
-  * collects here are sink-sized, not data-sized.
+  * Every tab is report-sized (post-aggregation) by construction, and
+  * `DiagReport.analyze` hands the tabs over as local relations of rows
+  * it has already collected, so the collects here read those rows
+  * without running a Spark job.
   */
 object DiagWorkbook {
 

@@ -136,15 +136,9 @@ object DedupPrepare {
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val entries =
       if (!fs.exists(p)) Seq("absent")
-      else {
-        val it = fs.listFiles(p, true)
-        val b = Seq.newBuilder[String]
-        while (it.hasNext) {
-          val st = it.next()
-          b += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-        }
-        b.result().sorted
-      }
+      else graft.sources.FsWalk.files(fs, p)
+        .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+        .sorted
     f"${scala.util.hashing.MurmurHash3.orderedHash(entries)}%08x"
   }
 

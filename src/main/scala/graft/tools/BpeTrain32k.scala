@@ -59,8 +59,9 @@ object BpeTrain32k {
     learned.map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
       .toDF("rank", "l", "r").coalesce(1)
       .write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    val part = new java.io.File(tmp).list()
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      .map(new java.io.File(tmp, _))
     require(part.length == 1, s"expected 1 part file, got ${part.length}")
     val dst = new java.io.File(out)
     if (dst.exists()) dst.delete()

@@ -94,7 +94,7 @@ object MaintainSoak {
         val wh = spark.conf.get("spark.sql.warehouse.dir")
           .stripPrefix("file:")
         val d = new java.io.File(wh, phys)
-        if (d.isDirectory) d.listFiles().count(_.getName.endsWith(".parquet"))
+        if (d.isDirectory) d.list().count(_.endsWith(".parquet"))
         else -1
       }
       (fam, phys, rows, files)

@@ -271,8 +271,8 @@ class DiagPipelineSpec extends AnyFunSuite with SparkTestBase {
     // the Hadoop FileSystem API — the s3a:// claim rests on exactly this
     // scheme-resolution path
     assert(DiagSource.nodeDirs(spark, uri) == DiagSource.nodeDirs(spark, abs))
-    def files(root: String) = DiagSource.wholeFiles(spark, root, "nodetool/cfstats")
-      .collect().map(r => (r.getString(0), r.getString(1).hashCode)).sortBy(_._1).toSeq
+    def files(root: String) =
+      DiagSource.cfstats(spark, root).collect().map(_.toString).sorted.toSeq
     assert(files(uri) == files(abs) && files(uri).nonEmpty)
     val t2 = DiagReport.analyze(spark, uri)
     assert(t2.clusterName == "TestCluster")

@@ -1,15 +1,27 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.Suite
+import org.scalatest.{BeforeAndAfterAll, Canceled, Failed, Outcome, TestSuite}
 
 /** Shared local session for specs (one JVM-wide session; Spark reuses it). */
-trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
+trait SparkTestBase extends TestSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** With `GRAFT_REQUIRE_FULL=1` a cancelled test fails: an `assume` that
+    * does not hold (a missing checkout or corpus) then shows as a failure
+    * instead of a pass that tested nothing. */
+  abstract override def withFixture(test: NoArgTest): Outcome =
+    super.withFixture(test) match {
+      case Canceled(e) if SparkTestBase.requireFull =>
+        Failed(new RuntimeException(
+          s"cancelled under GRAFT_REQUIRE_FULL=1: ${e.getMessage}", e))
+      case other => other
+    }
 }
 
 object SparkTestBase {
+  private val requireFull = sys.env.get("GRAFT_REQUIRE_FULL").contains("1")
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
