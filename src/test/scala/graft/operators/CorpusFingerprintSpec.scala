@@ -17,7 +17,9 @@ class CorpusFingerprintSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("sf0.001 documents.parquet keeps its fingerprint string") {
-    val dir = "/root/testdata/sf0.001"
+    // the read-only sf0.001 corpus (TESTDATA.md); the pinned string hashes
+    // its path, length and mtime as listed before `FsWalk` existed
+    val dir = Paths.get(sys.props("user.home"), "testdata", "sf0.001").toString
     assume(Files.exists(Paths.get(dir, "documents.parquet")), "sf0.001 corpus not present")
     assert(fp(dir, "documents.parquet") == "95401547")
   }
