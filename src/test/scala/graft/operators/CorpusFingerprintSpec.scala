@@ -17,11 +17,23 @@ class CorpusFingerprintSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("sf0.001 documents.parquet keeps its fingerprint string") {
-    // the read-only sf0.001 corpus (TESTDATA.md); the pinned string hashes
-    // its path, length and mtime as listed before `FsWalk` existed
+    // the read-only sf0.001 corpus (TESTDATA.md). The fingerprint hashes
+    // the file's mtime, which is whenever the corpus was provisioned on
+    // this box, not part of its seed-42 bytes, so no literal can be
+    // pinned. The expected string is the hash of the same file as
+    // listed before `FsWalk` existed: `FileSystem.listFiles`, with the
+    // entry format and hashing that listing used.
     val dir = Paths.get(sys.props("user.home"), "testdata", "sf0.001").toString
     assume(Files.exists(Paths.get(dir, "documents.parquet")), "sf0.001 corpus not present")
-    assert(fp(dir, "documents.parquet") == "95401547")
+    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val listed = Seq.newBuilder[String]
+    while (it.hasNext) {
+      val st = it.next()
+      listed += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
+    }
+    val expected = f"${scala.util.hashing.MurmurHash3.orderedHash(listed.result().sorted)}%08x"
+    assert(fp(dir, "documents.parquet") == expected)
   }
 
   test("a directory-form table hashes every data file under it: path, length, mtime") {
