@@ -44,9 +44,10 @@ object Bench {
     * (64 input slices regardless of cpus) so the number is a property of
     * the box+cpu-count, not of the corpus; the checksum is asserted so a
     * codegen/platform change that altered the WORK can never read as a
-    * speed change. */
+    * speed change. On drift the failure message prints the new checksum,
+    * which is the value to re-pin [[CanaryChecksum]] to. */
   private val CanaryChecksum = -3864612239909279609L
-  private[graft] def canaryChecksumOf(spark: SparkSession): Long = {
+  private def canaryChecksumOf(spark: SparkSession): Long = {
     import org.apache.spark.sql.functions._
     // bit_xor folds, not sum: ANSI mode overflows a LONG sum of 48M
     // full-range hashes; xor is overflow-free and order-independent

@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: dump formatted plans for a few representative queries to
-  * audit pushdown / pruning / join strategy (run via tools symlink). */
+/** Plan walks shared by production and the specs:
+  * [[graft.operators.DedupPrepare.ensure]] rejects any layer build with
+  * an unpartitioned window, and PlanBudgetSpec pins every query's
+  * exchange count. The main dumps formatted plans
+  * (`runMain graft.PlanAudit <query>...`) or, with `-counts`, the
+  * exchange census that PlanBudgetSpec's budgets are regenerated from. */
 object PlanAudit {
 
   /** Exchange census of a query's pre-AQE physical plan, by TREE WALK

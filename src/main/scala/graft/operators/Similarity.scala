@@ -142,7 +142,7 @@ object Similarity {
   val IvfKMin = 10
   val IvfKMax = 4096
 
-  private[graft] def ivfCellsOf(n: Long): Int =
+  private def ivfCellsOf(n: Long): Int =
     math.max(IvfKMin, math.min(IvfKMax,
       math.ceil(n.toDouble / IvfTargetCell).toInt))
 
@@ -364,7 +364,7 @@ object Similarity {
     * query↔centroid cosine (tie-break cell asc) → (query_id, ccell).
     * Shared by ss02/ss04 (exact in-cell scoring) and ss07 (ADC scoring):
     * one routing definition, every probe path agrees on where to look. */
-  private[graft] def bestCells(s: SparkSession, dir: String, nprobe: Int): DataFrame =
+  private def bestCells(s: SparkSession, dir: String, nprobe: Int): DataFrame =
     bestCellsRanked(s, dir, nprobe).select(col("query_id"), col("ccell"))
 
   /** [[bestCells]] with the per-query cell rank KEPT in the output —
@@ -373,23 +373,32 @@ object Similarity {
     * bestCells(2) (same window, same tie-break), which is what lets
     * ss05 probe once at the widest dial and slice (r15 opt). */
   private[graft] def bestCellsRanked(s: SparkSession, dir: String,
-      nprobe: Int): DataFrame = {
+      nprobe: Int): DataFrame =
+    rankedCells(s, dir).filter(col("rn") <= nprobe)
+      .select(col("query_id"), col("ccell"), col("rn"))
+
+  /** Per-query cell order of every routing rule: cosine desc, cell asc. */
+  private val cellOrder = Window.partitionBy(col("query_id"))
+    .orderBy(col("ccos").desc, col("ccell"))
+
+  /** Every (query, cell) pair with its query↔centroid cosine `ccos` and
+    * its rank `rn` under [[cellOrder]] — the routing prelude that the
+    * static ([[bestCellsRanked]]) and adaptive ([[bestCellsAdaptive]])
+    * rules each cut down. */
+  private def rankedCells(s: SparkSession, dir: String): DataFrame = {
     val cent = ivfCent(s, dir)
     val centNorm = cent.groupBy(col("cell"))
       .agg(sum(Dedup.gridL(col("c") * col("c"))).as("cn2"))
     val qel = explodedEl(s, dir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("pos"), col("x").as("qx"))
     val qNorm = qel.groupBy(col("query_id")).agg(sum(Dedup.gridL(col("qx") * col("qx"))).as("qn2"))
-    val qc = qel.join(cent.withColumnRenamed("cell", "ccell"), Seq("pos"))
+    qel.join(cent.withColumnRenamed("cell", "ccell"), Seq("pos"))
       .groupBy(col("query_id"), col("ccell"))
       .agg(sum(Dedup.gridL(col("qx") * col("c"))).as("dotqc"))
       .join(qNorm, Seq("query_id"))
       .join(centNorm.withColumnRenamed("cell", "ccell"), Seq("ccell"))
       .withColumn("ccos", cosine(col("dotqc"), col("qn2"), col("cn2")))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("ccell"))
-    qc.withColumn("rn", row_number().over(wc)).filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("ccell"), col("rn"))
+      .withColumn("rn", row_number().over(cellOrder))
   }
 
   /** Adaptive probe width: a query may probe up to this many cells —
@@ -425,30 +434,13 @@ object Similarity {
     * best cell's, up to [[AdaptiveNpMax]]. Probe width is therefore a
     * per-query, data-driven quantity: the dial the static
     * nprobe=1/2/4 family approximates from the outside. */
-  private[graft] def bestCellsAdaptive(s: SparkSession, dir: String,
-      npMax: Int = AdaptiveNpMax,
-      beta: Double = AdaptiveBeta): DataFrame = {
-    val cent = ivfCent(s, dir)
-    val centNorm = cent.groupBy(col("cell"))
-      .agg(sum(Dedup.gridL(col("c") * col("c"))).as("cn2"))
-    val qel = explodedEl(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("pos"), col("x").as("qx"))
-    val qNorm = qel.groupBy(col("query_id")).agg(sum(Dedup.gridL(col("qx") * col("qx"))).as("qn2"))
-    val qc = qel.join(cent.withColumnRenamed("cell", "ccell"), Seq("pos"))
-      .groupBy(col("query_id"), col("ccell"))
-      .agg(sum(Dedup.gridL(col("qx") * col("c"))).as("dotqc"))
-      .join(qNorm, Seq("query_id"))
-      .join(centNorm.withColumnRenamed("cell", "ccell"), Seq("ccell"))
-      .withColumn("ccos", cosine(col("dotqc"), col("qn2"), col("cn2")))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("ccell"))
-    qc.withColumn("rn", row_number().over(wc))
-      .withColumn("ccos1", first(col("ccos")).over(wc))
+  private[graft] def bestCellsAdaptive(s: SparkSession, dir: String): DataFrame =
+    rankedCells(s, dir)
+      .withColumn("ccos1", first(col("ccos")).over(cellOrder))
       .filter(col("rn") === 1 ||
-        (col("rn") <= npMax &&
-          (lit(1.0) - col("ccos")) <= lit(beta) * (lit(1.0) - col("ccos1"))))
+        (col("rn") <= AdaptiveNpMax &&
+          (lit(1.0) - col("ccos")) <= lit(AdaptiveBeta) * (lit(1.0) - col("ccos1"))))
       .select(col("query_id"), col("ccell"))
-  }
 
   private def ivf(s: SparkSession, dir: String, nprobe: Int): DataFrame =
     ivfOver(s, dir, bestCells(s, dir, nprobe))
@@ -460,7 +452,7 @@ object Similarity {
   def ss12(s: SparkSession, dir: String): DataFrame =
     ivfOver(s, dir, bestCellsAdaptive(s, dir))
 
-  private[graft] def ivfOver(s: SparkSession, dir: String,
+  private def ivfOver(s: SparkSession, dir: String,
       best: DataFrame): DataFrame = {
     val scored = ivfScoredOver(s, dir, best)
     val w = Window.partitionBy(col("query_id"))
@@ -590,11 +582,6 @@ object Similarity {
        |            WHERE rn <= $cap)""".stripMargin
   }
 
-  /** Oracle twin of [[bestCells]] + the built membership: closing
-    * centroids, query routing `qel`/`qnorm`/`qc`/`qcs`/`best`, and the
-    * cap+spill `cappedc` chain. Expects `el`/`nrm` ([[elCte]]) and the
-    * unrolled Lloyd chain ([[kmeansCtes]]) in scope. Shared by
-    * ss02/ss04/ss07/ss08/ss09/ss10's oracles. */
   /** The fixed-nprobe `best` routing CTE. */
   private def bestCte(nprobe: Int): String =
     s"""best AS (SELECT query_id, ccell FROM (
@@ -604,21 +591,26 @@ object Similarity {
 
   /** The adaptive (distance-ratio-stop) `best` routing CTE — oracle
     * twin of [[bestCellsAdaptive]]. β is chosen binary-representable
-    * (1.25 = 5/4) so the engine's `lit(β)` and this SQL literal are the
+    * (1.5 = 3/2) so the engine's `lit(β)` and this SQL literal are the
     * SAME IEEE double and the stop boundary can never skew. */
-  private def bestCteAdaptive(npMax: Int, beta: Double): String =
+  private def bestCteAdaptive: String =
     s"""best AS (SELECT query_id, ccell FROM (
        |           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
        |                       ORDER BY ccos DESC, ccell) AS rn,
        |                  FIRST_VALUE(ccos) OVER (PARTITION BY query_id
        |                       ORDER BY ccos DESC, ccell) AS ccos1
        |           FROM qcs)
-       |         WHERE rn = 1 OR (rn <= $npMax
-       |                AND (1.0 - ccos) <= $beta * (1.0 - ccos1)))""".stripMargin
+       |         WHERE rn = 1 OR (rn <= $AdaptiveNpMax
+       |                AND (1.0 - ccos) <= $AdaptiveBeta * (1.0 - ccos1)))""".stripMargin
 
   private def ivfRouteCtes(nprobe: Int): String =
     ivfRouteCtesOver(bestCte(nprobe))
 
+  /** Oracle twin of [[bestCells]] + the built membership: closing
+    * centroids, query routing `qel`/`qnorm`/`qc`/`qcs`/`best`, and the
+    * cap+spill `cappedc` chain. Expects `el`/`nrm` ([[elCte]]) and the
+    * unrolled Lloyd chain ([[kmeansCtes]]) in scope. Shared by
+    * ss02/ss04/ss07/ss08/ss09/ss10's oracles. */
   private def ivfRouteCtesOver(best: String): String = {
     s"""$closingCentCtes,
        |qel AS (SELECT vec_id AS query_id, pos, x AS qx FROM el WHERE vec_id < 10),
@@ -640,7 +632,7 @@ object Similarity {
 
   /** [[ivfSql]] over the adaptive routing CTE — ss12's oracle. */
   private[operators] def ss12Sql: String =
-    ivfSqlOver(ivfRouteCtesOver(bestCteAdaptive(AdaptiveNpMax, AdaptiveBeta)))
+    ivfSqlOver(ivfRouteCtesOver(bestCteAdaptive))
 
   private def ivfSqlOver(route: String): String = {
     s"""WITH $elCte,
@@ -953,7 +945,7 @@ object Similarity {
       .join(hit(ivfTop5(scored2), "h2"), Seq("query_id", "neighbor_id"), "left")
       .join(hit(ss03(s, dir), "h3"), Seq("query_id", "neighbor_id"), "left")
       .join(hit(ss06Over(s, pq), "h4"), Seq("query_id", "neighbor_id"), "left")
-      .join(hit(ivfPqOverScored(cand7, pq, IvfPqShortlist), "h5"),
+      .join(hit(ivfPqOverScored(cand7, pq), "h5"),
         Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
       .agg(
@@ -1244,37 +1236,17 @@ object Similarity {
     */
   val IvfPqShortlist = 256
 
-  def ss07(s: SparkSession, dir: String): DataFrame =
-    ivfPq(s, dir, nprobe = 1, shortlist = IvfPqShortlist)
-
-  /** The ADC-scan candidate set at a given nprobe — (query_id, ccell,
-    * vec_id): capped members of each query's routed cells. Split out so
-    * the sweep tool can report the DETERMINISTIC per-setting cost (code
-    * rows ADC-scanned) exactly as the serving plan computes it. */
-  private[graft] def ivfPqCandidates(s: SparkSession, dir: String,
-      nprobe: Int): DataFrame =
-    ivfMembers(s, dir).select(col("cell"), col("vec_id"))
-      .join(broadcast(bestCells(s, dir, nprobe)), col("cell") === col("ccell"))
+  def ss07(s: SparkSession, dir: String): DataFrame = {
+    // ADC-scan candidates (query_id, ccell, vec_id): the capped members
+    // of each query's one routed cell
+    val cand = ivfMembers(s, dir).select(col("cell"), col("vec_id"))
+      .join(broadcast(bestCells(s, dir, 1)), col("cell") === col("ccell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("ccell"), col("vec_id"))
-
-  /** [[ss07]] with the two serving dials exposed — the sweep surface
-    * behind the r11 recall/cost curve (tools/IvfPqSweep): `nprobe`
-    * routed cells per query, ADC shortlist width `shortlist`. Identical
-    * plan at any setting; ss07 is (1, [[IvfPqShortlist]]). */
-  private[graft] def ivfPq(s: SparkSession, dir: String,
-      nprobe: Int, shortlist: Int): DataFrame =
-    ivfPqOver(s, dir, ivfPqCandidates(s, dir, nprobe), pqServe(s, dir),
-      shortlist)
-
-  /** [[ivfPq]] over an explicit candidate set + pre-built PQ pieces —
-    * the shareable core (ss05 feeds the candidates it already scored
-    * exactly and the pooled [[PqServe]], r15 opt). */
-  private[graft] def ivfPqOver(s: SparkSession, dir: String,
-      cand: DataFrame, pq: PqServe, shortlist: Int): DataFrame = {
+    val pq = pqServe(s, dir)
     graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
-    val sl = adcShortlist(cand, pq, shortlist)
+    val sl = adcShortlist(cand, pq)
     // exact rerank: raw vectors for ≤ shortlist×queries rows only
     val q = e.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       .filter(col("query_id") < 10)
@@ -1288,10 +1260,9 @@ object Similarity {
       col("vec_id"), col("cosine")))
   }
 
-  /** The ADC shortlist of [[ivfPqOver]] — (query_id, ccell, vec_id),
-    * the `srn <= shortlist` slice by approximate cosine. */
-  private def adcShortlist(cand: DataFrame, pq: PqServe,
-      shortlist: Int): DataFrame = {
+  /** The ADC shortlist of [[ss07]] — (query_id, ccell, vec_id), the
+    * top-[[IvfPqShortlist]] slice by approximate cosine. */
+  private def adcShortlist(cand: DataFrame, pq: PqServe): DataFrame = {
     import pq.{codes, rn2, qn2, lut}
     // ADC over the candidates' code rows only — the compressed scan
     val adc = cand.select(col("query_id"), col("ccell"), col("vec_id"))
@@ -1305,11 +1276,11 @@ object Similarity {
     val ws = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_cos").desc, col("vec_id"))
     adc.withColumn("srn", row_number().over(ws))
-      .filter(col("srn") <= shortlist)
+      .filter(col("srn") <= IvfPqShortlist)
       .select(col("query_id"), col("ccell"), col("vec_id"))
   }
 
-  /** The exact-rerank presentation window shared by [[ivfPqOver]] and
+  /** The exact-rerank presentation window shared by [[ss07]] and
     * [[ivfPqOverScored]]: top-5 per query by (cosine desc, vec_id). */
   private def rerankTop5(rer: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
@@ -1321,21 +1292,20 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** [[ivfPqOver]] for a candidate set that ALREADY CARRIES its exact
-    * cosine (ss05's rank-1 slice of the wide probe, r16 opt): the
-    * shortlist's exact rerank reads `cosine` back off the candidate
-    * rows (a join against the pooled probe relation) instead of
-    * re-scanning the corpus and recomputing dot/norms. Bit-identical
-    * to [[ivfPqOver]] on the same candidates: the probe's cosine is
-    * the same grid-exact `cosine(dotL, qn2, nn2)` over the same
+  /** [[ss07]]'s shortlist + rerank for a candidate set that ALREADY
+    * CARRIES its exact cosine (ss05's rank-1 slice of the wide probe,
+    * r16 opt): the shortlist's exact rerank reads `cosine` back off the
+    * candidate rows (a join against the pooled probe relation) instead
+    * of re-scanning the corpus and recomputing dot/norms. Bit-identical
+    * to [[ss07]] on the same candidates: the probe's cosine is the same
+    * grid-exact `cosine(dotL, qn2, nn2)` over the same
     * embeddings (the membership layer's `nn2` is the same [[normL]]
     * computed at layer write), and the rerank window keys/tie-breaks
     * are unchanged — OperatorsSpec's ss05 composition pin holds
     * hit-for-hit. Saves one full corpus scan + two broadcast joins per
     * audit run. */
-  private[graft] def ivfPqOverScored(cand: DataFrame, pq: PqServe,
-      shortlist: Int): DataFrame =
-    rerankTop5(adcShortlist(cand, pq, shortlist)
+  private[graft] def ivfPqOverScored(cand: DataFrame, pq: PqServe): DataFrame =
+    rerankTop5(adcShortlist(cand, pq)
       .join(cand.select(col("query_id"), col("vec_id"), col("cosine")),
         Seq("query_id", "vec_id")))
 

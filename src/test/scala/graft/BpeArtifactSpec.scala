@@ -5,9 +5,19 @@ import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 
 /** Pins the COMMITTED model-scale BPE artifact (r11 verdict #2):
-  * `artifacts/bpemerges_sf1_32k.parquet`, the real 32,768-merge table
-  * trained by tools/BpeTrain32k (`bpeMergesBatched` k=64 over the
-  * sf1.0 word dict; train wall + SHA-256 in SCALING.md round-12).
+  * `artifacts/bpemerges_sf1_32k.parquet`, the real 32,768-merge table.
+  * It was trained over the sf1.0 word dict
+  * {{{
+  * graft.functions.GraftFunctions.register(spark)
+  * val words = spark.read.parquet("testdata/sf1.0/documents.parquet")
+  *   .select(explode(call_function("tok_split", col("text"))).as("tok"))
+  *   .filter(col("tok") =!= "")
+  * TextAnalysis.bpeMergesBatched(spark, words, 32768, k = 64)
+  * }}}
+  * and the result written rank-ordered as one parquet part; its train
+  * wall and SHA-256 are in SCALING.md round 12. The training main is
+  * `git show deaae21:src/main/scala/graft/tools/BpeTrain32k.scala`.
+  *
   * These are the properties a real tokenizer export must satisfy to
   * serve ta17/ta18/sp11 through the ta17With swap hook — shape, greedy
   * well-formedness, reconstruction, and fertility strictly better than
@@ -19,7 +29,8 @@ class BpeArtifactSpec extends AnyFunSuite with SparkTestBase {
 
   private def artifact = {
     assert(new java.io.File(artifactPath).isFile,
-      s"committed BPE artifact missing: $artifactPath (tools/BpeTrain32k)")
+      s"committed BPE artifact missing: $artifactPath (trained by " +
+        "git show deaae21:src/main/scala/graft/tools/BpeTrain32k.scala)")
     spark.read.parquet(artifactPath)
   }
 

@@ -10,8 +10,9 @@ import graft.operators.{Dedup, DedupPrepare, LayerMaintenance}
   *      over corpus v2,
   *  (b) a real consumer query (dd03's verified pair relation) agrees,
   *  (c) the append reports per-family internal costs (the ≪-rebuild
-  *      claim is measured at soak scale by graft.tools.IngestBench and
-  *      recorded in SCALING.md — spec scale is overhead-dominated),
+  *      claim is measured at soak scale in
+  *      `artifacts/INGESTBENCH_SF10_R14.log` and SCALING.md — spec scale
+  *      is overhead-dominated),
   *  (d) compaction restores single-file buckets and the
   *      fingerprint-keyed table name with content unchanged, and
   *  (e) the capped band layer stays exactly capped across the ingest
@@ -127,8 +128,9 @@ class LayerMaintenanceSpec extends AnyFunSuite with SparkTestBase {
     // are fixed-per-job-overhead-dominated and the suite runs
     // concurrently in a shared session, so the comparison flakes in
     // either direction. The measured ≪ evidence is the committed
-    // IngestBench run in SCALING.md (append cost stays batch-sized
-    // while rebuild grows with the corpus). Printed for visibility:
+    // `artifacts/INGESTBENCH_SF10_R14.log`, summarized in SCALING.md
+    // (append cost stays batch-sized while rebuild grows with the
+    // corpus). Printed for visibility:
     info(f"append internal $appendSecs%.1f s vs v1 build wall $buildSecs%.1f s")
 
     // pre-compact: appended layers live under their PRE-ingest names
