@@ -8,7 +8,8 @@ import graft.operators.DiagAnalysis
 import graft.sources.DiagSource
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+import java.util.UUID
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 /** End-to-end diag pipeline (the reference's E1, SURVEY.md §3): parse a
@@ -18,7 +19,8 @@ import scala.jdk.CollectionConverters._
   * The analysis runs distributed and reduces every relation to a
   * report-sized tab (≤ thousands of rows). `analyze` then collects each
   * tab once, all tabs concurrently, and hands the sinks local relations
-  * of those rows, so no sink re-runs the analysis.
+  * of those rows, so no sink re-runs the analysis. The warnings that the
+  * threshold, gc and tombstone tabs decide are read off those rows.
   * usage: DiagReport <diagRoot> <outDir>
   */
 object DiagReport {
@@ -55,18 +57,16 @@ object DiagReport {
 
     val dirIp = DiagSource.nodeIpMap(spark, root, statusRows.map(_.ip).toSet)
       .toSeq.toDF("node_dir", "ip")
-    val gcPct = DiagAnalysis.gcPercentiles(gcEv, nodeDc, cluster)
-    try collected(spark, Tabs(
+    val tabs = try collected(spark, Tabs(
       nodeTable = DiagAnalysis.nodeTable(status, gossip, info, ossVer, dirIp),
       workload = DiagAnalysis.workload(metrics, rf, info, inclSys),
-      gc = gcPct,
+      gc = DiagAnalysis.gcPercentiles(gcEv, nodeDc, cluster),
       tombstones = DiagAnalysis.tombstoneTab(tsEv, nodeDc),
-      thresholds = DiagAnalysis.thresholdTabs(metrics, nodeDc, DiagAnalysis.tabSpecs(tp)),
-      warnings = DiagAnalysis.guardrailWarnings(spark, catalog.objects, metrics,
-          gcPct, tsEv, nodeDc, cluster, tp)
+      thresholds = DiagAnalysis.thresholdTabs(metrics, nodeDc, tp),
+      // the warnings that need no tab; the tabs' own join them below
+      warnings = DiagAnalysis.schemaWarnings(spark, catalog.objects, tp)
         .unionByName(DiagAnalysis.missingNodeWarnings(status, gossip, dirIp))
-        .unionByName(DiagAnalysis.workloadWarnings(gossip))
-        .orderBy("category", "check", "message"),
+        .unionByName(DiagAnalysis.workloadWarnings(gossip)),
       proxyHist = DiagAnalysis.proxyHistTab(DiagSource.proxyHist(spark, root), nodeDc),
       clusterName = cluster,
       seenTables = DiagAnalysis.seenTables(metrics, inclSys)))
@@ -74,6 +74,8 @@ object DiagReport {
       metrics.unpersist()
       logs.unpersist()
     }
+    tabs.copy(warnings = DiagAnalysis.warnings(tabs.warnings, tabs.thresholds, tabs.gc,
+      tabs.tombstones, tp))
   }
 
   /** `df`'s rows, collected once, as a local relation. */
@@ -84,9 +86,13 @@ object DiagReport {
     * local relation. Each relation gets its own thread, so the queries'
     * driver-side planning and codegen overlap as well as their jobs. The
     * pool is made here, so its threads inherit the caller's Spark job
-    * group and local properties. A failed collect rethrows its own
-    * exception, and no pool thread outlives the call. */
+    * group and local properties; each adds one job tag for this call.
+    * The first collect to fail cancels the others' jobs through that
+    * tag, and the call rethrows that collect's own exception once no
+    * pool thread is left. */
   private[graft] def collected(spark: SparkSession, tabs: Tabs): Tabs = {
+    val sc = spark.sparkContext
+    val tag = s"graft-diag-collect-${UUID.randomUUID}"
     val dfs = Seq(tabs.nodeTable, tabs.workload, tabs.gc, tabs.tombstones,
       tabs.thresholds, tabs.warnings, tabs.proxyHist, tabs.seenTables)
     val pool = Executors.newFixedThreadPool(dfs.size, { (r: Runnable) =>
@@ -94,19 +100,28 @@ object DiagReport {
       t.setDaemon(true)
       t
     })
+    val done = new ExecutorCompletionService[DataFrame](pool)
     try {
-      val pending = dfs.map(df => pool.submit(() => local(spark, df)))
-      val Seq(nodeTable, workload, gc, tombstones, thresholds, warnings,
-        proxyHist, seenTables) = pending.map { f =>
-        try f.get()
+      val pending = dfs.map(df => done.submit { () =>
+        sc.addJobTag(tag)
+        sc.setInterruptOnCancel(true) // a cancelled task stops mid-record
+        local(spark, df)
+      })
+      // in completion order, so the first failure is seen at once
+      dfs.foreach { _ =>
+        try done.take().get()
         catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
       }
+      val Seq(nodeTable, workload, gc, tombstones, thresholds, warnings,
+        proxyHist, seenTables) = pending.map(_.get())
       tabs.copy(nodeTable = nodeTable, workload = workload, gc = gc,
         tombstones = tombstones, thresholds = thresholds, warnings = warnings,
         proxyHist = proxyHist, seenTables = seenTables)
     } finally {
-      pool.shutdownNow()
-      pool.awaitTermination(1, TimeUnit.MINUTES)
+      // after a failure, cancel the other threads' jobs, and any job a
+      // thread starts later, until every thread has ended
+      pool.shutdown()
+      while (!pool.awaitTermination(50, TimeUnit.MILLISECONDS)) sc.cancelJobsWithTag(tag)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
+import graft.operators.DiagAnalysis
 import java.nio.file.{Files, Paths}
 
 /** Spreadsheet-shaped report: one CSV per workbook tab, with the
@@ -44,22 +45,6 @@ object DiagWorkbook {
   private def pc(v: Any) = DiagXlsx.Styled(v, DiagXlsx.Styles.Pct2)
   private def d4(v: Any) = DiagXlsx.Styled(v, DiagXlsx.Styles.Dec4)
 
-  /** The reference's cfstats threshold tabs: engine tab key →
-    * (workbook tab name, headers) — explore.py:445-450. */
-  private val ThresholdTabs = Seq(
-    "dropped_mutation" -> ("Dropped Mutation",
-      Seq("Node", "DC", "Keyspace", "Table", "Dropped Mutations")),
-    "num_tables" -> ("Number of Tables",
-      Seq("Sample Node", "DC", "Keyspace", "Table", "Total Number of Tables")),
-    "large_partition" -> ("Large Partitions",
-      Seq("Node", "DC", "Keyspace", "Table", "Partition Size(MB)")),
-    "sstable_count" -> ("SSTable Count",
-      Seq("Example Node", "DC", "Keyspace", "Table", "SSTable Count")),
-    "read_latency" -> ("Read Latency",
-      Seq("Node", "DC", "Keyspace", "Table", "Read Latency (ms)")),
-    "write_latency" -> ("Write Latency",
-      Seq("Node", "DC", "Keyspace", "Table", "Write Latency (ms)")))
-
   /** Write all workbook tabs as `<outDir>/workbook/<Tab Name>.csv`. */
   def write(tabs: DiagReport.Tabs, outDir: String): Unit = {
     val dir = s"$outDir/workbook"
@@ -75,7 +60,7 @@ object DiagWorkbook {
       "Workload" -> (3, 0), "Data Size" -> (2, 2), "Node Data" -> (1, 0),
       "Proxihistogram" -> (2, 0), "Tombstones" -> (1, 0),
       "GC Pauses" -> (2, 0)) ++
-      ThresholdTabs.map(_._2._1 -> (1, 0)).toMap
+      DiagAnalysis.tabSpecs.map(_.title -> (1, 0)).toMap
     DiagXlsx.write(s"$outDir/${tabs.clusterName}_astra_chart.xlsx", s, freeze,
       merges, comments)
   }
@@ -192,15 +177,15 @@ object DiagWorkbook {
 
     // ---- threshold tabs (explore.py:445-450)
     val th = tabs.thresholds.collect().groupBy(_.getAs[String]("tab"))
-    ThresholdTabs.foreach { case (key, (tabName, headers)) =>
+    DiagAnalysis.tabSpecs.foreach { t =>
       // 2-dp for ms/MB values, thousands format for counts
       val fmt: Any => Any =
-        if (key == "read_latency" || key == "write_latency" || key == "large_partition") d2
+        if (t.name == "read_latency" || t.name == "write_latency" || t.name == "large_partition") d2
         else i0
-      val rows = th.getOrElse(key, Array.empty[Row]).toSeq.map(r => Seq(
+      val rows = th.getOrElse(t.name, Array.empty[Row]).toSeq.map(r => Seq(
         get(r, "node"), get(r, "dc"), get(r, "keyspace"), get(r, "table"),
         fmt(num(r, "value"))))
-      sheet(tabName, headers.map(_.asInstanceOf[Any]) +: rows)
+      sheet(t.title, t.headers +: rows)
     }
 
     // ---- Tombstones (explore.py:1575-1600; ts_cols order)
@@ -281,7 +266,7 @@ object DiagWorkbook {
     // reference sheet order: Astra Metrics, Workload, Data Size, the
     // sheets_data tabs, Tombstones, GC Pauses (explore.py:1127-1138)
     val order = Seq("Astra Metrics", "Workload", "Data Size", "Node Data",
-      "Proxihistogram") ++ ThresholdTabs.map(_._2._1) ++
+      "Proxihistogram") ++ DiagAnalysis.tabSpecs.map(_.title) ++
       Seq("Tombstones", "GC Pauses")
     val byName = out.toMap
     (order.flatMap(n => byName.get(n).map(n -> _)),

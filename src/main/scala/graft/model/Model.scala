@@ -22,11 +22,14 @@ final case class GossipNode(
   * (ref explore.py:907-998): the single relation feeding every
   * threshold/guardrail tab. `table` is empty for keyspace-level metrics
   * (e.g. "Total number of tables" appears before any keyspace too —
-  * then `keyspace` is empty as well).
+  * then `keyspace` is empty as well). `value` is the line's number,
+  * parsed once: a trailing `ms` unit is dropped ("NaN ms" is NaN), and
+  * text that is not a number is `None`. The parser keeps every line;
+  * the analysis fails a report that reads a `None` (DiagAnalysis).
   */
 final case class TableMetric(
     node: String, keyspace: String, table: String, isIndex: Boolean,
-    metric: String, value: String)
+    metric: String, value: Option[Double])
 
 /** One schema object from the CQL DDL dump (ref explore.py:722-877).
   * kind ∈ Table, Index, Storage-Attached Index, Materialized Views,

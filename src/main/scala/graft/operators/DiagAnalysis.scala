@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model._
+
+import scala.jdk.CollectionConverters._
 
 /** Relational analysis layer over the parsed diag relations (SURVEY.md
   * §2.2–§2.8 mapped onto the real reference pipelines): workload
@@ -22,7 +25,13 @@ object DiagAnalysis {
   private def notSystem(ksCol: Column, inclSys: Boolean): Column =
     if (inclSys) !ksCol.isin("OpsCenter") else !ksCol.isin(SystemKeyspaces: _*)
 
-  private def num(c: Column): Column = c.cast("double")
+  /** A cfstats row's number, for the rows a tab reads. A row whose text
+    * was not a number fails the query with an error naming the row: the
+    * parser keeps every line, and the analysis refuses to read a number
+    * that is not there. */
+  private val number: Column = coalesce(col("value"), raise_error(concat(
+    lit("cfstats value is not a number: node "), col("node"), lit(", table "),
+    col("keyspace"), lit("."), col("table"), lit(", metric "), col("metric"))))
 
   /** Node tab (ref explore.py:1521-1563): status ⋈ gossip ⋈ info uptime;
     * OSS nodes get "OSS Cassandra" + release version (674-712). */
@@ -77,7 +86,7 @@ object DiagAnalysis {
 
     val base = m.filter(col("metric").isin(
         "Space used (live)", "Local read count", "Local write count"))
-      .withColumn("v", num(col("value")))
+      .withColumn("v", number)
       .filter(col("v") > 0)
       .join(broadcast(nd), Seq("node"), "left")
       .join(broadcast(totalRf), Seq("keyspace"), "left")
@@ -186,90 +195,91 @@ object DiagAnalysis {
       .orderBy(col("tombstones").desc, col("keyspace"), col("table"))
   }
 
-  /** One threshold tab spec (ref sheets_data, explore.py:443-450).
-    * `scaleMb` divides the emitted value by 1e6 (the reference reports
-    * the Large Partitions tab in MB, explore.py:1462). */
-  final case class TabSpec(name: String, metric: String, threshold: Double,
-      stripMs: Boolean = false, maxPerTable: Boolean = false,
-      scaleMb: Boolean = false)
+  /** One threshold tab, a row of the reference's sheets_data
+    * (explore.py:443-450): the cfstats `metric` rows at or over the
+    * tab's `threshold`, each value divided by `perUnit` (1e6: the
+    * reference reports the Large Partitions tab in MB, explore.py:1462).
+    * `maxPerTable` keeps one row per table. `title` names the workbook
+    * tab, with `headers`, and the tab's warning; a non-empty `health`
+    * tab flips "<title> greater than <threshold>" (explore.py:1442-1446). */
+  final case class TabSpec(name: String, title: String, metric: String,
+      threshold: Thresholds => Double, headers: Seq[String],
+      maxPerTable: Boolean = false, perUnit: Double = 1.0, health: Boolean = false)
 
-  /** The reference's cfstats-driven tabs, thresholds from [[Thresholds]]. */
-  def tabSpecs(tp: Thresholds): Seq[TabSpec] = Seq(
-    TabSpec("dropped_mutation", "Dropped Mutations", tp.tpDrm.toDouble),
-    TabSpec("num_tables", "Total number of tables", tp.tpTblCnt.toDouble, maxPerTable = true),
-    TabSpec("large_partition", "Compacted partition maximum bytes", tp.tpLparMb * 1e6,
-      scaleMb = true),
-    TabSpec("sstable_count", "SSTable count", tp.tpSstbl.toDouble, maxPerTable = true),
-    TabSpec("read_latency", "Local read latency", tp.tpRlMs, stripMs = true),
-    TabSpec("write_latency", "Local write latency", tp.tpWlMs, stripMs = true))
+  /** The reference's cfstats-driven tabs: the one place that names a
+    * threshold metric and its threshold. */
+  val tabSpecs: Seq[TabSpec] = Seq(
+    TabSpec("dropped_mutation", "Dropped Mutation", "Dropped Mutations", _.tpDrm.toDouble,
+      Seq("Node", "DC", "Keyspace", "Table", "Dropped Mutations"), health = true),
+    TabSpec("num_tables", "Number of Tables", "Total number of tables", _.tpTblCnt.toDouble,
+      Seq("Sample Node", "DC", "Keyspace", "Table", "Total Number of Tables"),
+      maxPerTable = true),
+    TabSpec("large_partition", "Large Partitions", "Compacted partition maximum bytes",
+      _.tpLparMb * 1e6, Seq("Node", "DC", "Keyspace", "Table", "Partition Size(MB)"),
+      perUnit = 1e6),
+    TabSpec("sstable_count", "SSTable Count", "SSTable count", _.tpSstbl.toDouble,
+      Seq("Example Node", "DC", "Keyspace", "Table", "SSTable Count"),
+      maxPerTable = true, health = true),
+    TabSpec("read_latency", "Read Latency", "Local read latency", _.tpRlMs,
+      Seq("Node", "DC", "Keyspace", "Table", "Read Latency (ms)"), health = true),
+    TabSpec("write_latency", "Write Latency", "Local write latency", _.tpWlMs,
+      Seq("Node", "DC", "Keyspace", "Table", "Write Latency (ms)"), health = true))
 
-  /** Threshold tabs (P3/P4, ref explore.py:1424-1492): filter the metric
-    * relation per spec; `maxPerTable` keeps one representative row per
-    * (ks,tbl) with the max value (the reference's *intended* semantics
-    * of the `extra` flag — its `hasattr` bug makes it last-wins;
-    * SURVEY.md §4 documents implementing the intent). Returns
-    * (tab, node, dc, keyspace, table, value).
+  /** Threshold tabs (P3/P4, ref explore.py:1424-1492): one filter of the
+    * metric relation joined to the spec relation, then one ranking;
+    * `maxPerTable` keeps the row per (tab, ks, tbl) with the max value
+    * (the reference's *intended* semantics of the `extra` flag — its
+    * `hasattr` bug makes it last-wins; SURVEY.md §4 documents
+    * implementing the intent). Returns (tab, node, dc, keyspace, table,
+    * value).
     */
   def thresholdTabs(metrics: Dataset[TableMetric], nodeDc: DataFrame,
-      specs: Seq[TabSpec]): DataFrame = {
+      tp: Thresholds): DataFrame = {
+    val sp = metrics.sparkSession.createDataFrame(tabSpecs.map(t =>
+        (t.name, t.metric, t.threshold(tp), t.perUnit, t.maxPerTable)))
+      .toDF("tab", "metric", "threshold", "perUnit", "maxPerTable")
+    val rank = Window.partitionBy(col("tab"), col("keyspace"), col("table"))
+      .orderBy(col("value").desc, col("node"))
     // the reference excludes the FULL system list here regardless of
     // -incl_sys (explore.py:1429-1431 uses system_keyspace, not
     // dni_keyspace) — only the workload pass narrows
-    val m = metrics.toDF()
+    metrics.toDF()
       .filter(notSystem(col("keyspace"), inclSys = false))
+      .join(broadcast(sp), Seq("metric"))
+      // NaN guard: idle tables print "NaN ms" latencies, and Spark
+      // orders NaN ABOVE every number (unlike Python's NaN>=x == False)
+      // — without this the latency tabs flood with idle tables
+      .filter(number >= col("threshold") && !isnan(col("value")))
       .join(broadcast(nodeDc), Seq("node"), "left")
-    val perSpec = specs.map { sp =>
-      val vRaw = if (sp.stripMs)
-        num(regexp_replace(col("value"), "\\s*ms\\s*$", ""))
-      else num(col("value"))
-      val base = m.filter(col("metric") === sp.metric)
-        .withColumn("v", vRaw)
-        // NaN guard: idle tables print "NaN ms" latencies, and Spark
-        // orders NaN ABOVE every number (unlike Python's NaN>=x == False)
-        // — without this the latency tabs flood with idle tables
-        .filter(col("v") >= sp.threshold && !isnan(col("v")))
-        .select(lit(sp.name).as("tab"), col("node"), col("dc"),
-          col("keyspace"), col("table"),
-          (if (sp.scaleMb) (col("v") / 1e6) else col("v")).as("value"))
-      if (sp.maxPerTable) {
-        val w = Window.partitionBy(col("keyspace"), col("table"))
-          .orderBy(col("value").desc, col("node"))
-        base.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn")
-      } else base
-    }
-    perSpec.reduce(_.unionByName(_))
+      .select(col("tab"), col("node"), col("dc"), col("keyspace"), col("table"),
+        (col("value") / col("perUnit")).as("value"), col("maxPerTable"))
+      .withColumn("rn", row_number().over(rank))
+      .filter(!col("maxPerTable") || col("rn") === 1)
+      .drop("rn", "maxPerTable")
       .orderBy("tab", "keyspace", "table", "node")
   }
 
-  /** Guardrail warnings (ref explore.py:1085-1119, 1442-1464, 809-838,
-    * 388-389): returns (category, check, message) rows. `***` marks the
+  /** Astra Guardrails read off the schema (ref explore.py:1085-1119,
+    * 809-838): returns (category, check, message) rows. `***` marks the
     * hard-guardrail tier (P4). Implements collect-all intent for the
     * UDF/UDA and column-count warnings (the reference's `.append =` bug
     * records only the first — SURVEY.md §4).
     */
-  def guardrailWarnings(spark: SparkSession, schema: Seq[SchemaObject],
-      metrics: Dataset[TableMetric], gcPct: DataFrame, tombstones: Dataset[TombstoneEvent],
-      nodeDc: DataFrame, clusterName: String, tp: Thresholds): DataFrame = {
+  def schemaWarnings(spark: SparkSession, schema: Seq[SchemaObject],
+      tp: Thresholds): DataFrame = {
     import spark.implicits._
     val gr = "Astra Guardrails"
-    val dh = "Database Health"
     // like thresholdTabs: guardrails always exclude the full system list
     // (explore.py:1094, 1105 use system_keyspace)
     val so = spark.createDataset(schema).toDF()
       .filter(notSystem(col("keyspace"), inclSys = false))
 
     // MV / SI / SAI counts per source table (1085-1099)
-    val kindCfg = Seq(
-      ("Materialized Views", tp.grMv, tp.tpMv),
-      ("Index", tp.grSi, tp.tpSi),
-      ("Storage-Attached Index", tp.grSai, tp.tpSai))
-    val perKind = kindCfg.map { case (kind, grLmt, tpLmt) =>
-      val checkName = kind match {
-        case "Index" => "Secondary Indexes"
-        case "Storage-Attached Index" => "Storage-Attached Indexes"
-        case k => k
-      }
+    val perKind = Seq(
+      ("Materialized Views", "Materialized Views", tp.grMv, tp.tpMv),
+      ("Index", "Secondary Indexes", tp.grSi, tp.tpSi),
+      ("Storage-Attached Index", "Storage-Attached Indexes", tp.grSai, tp.tpSai)
+    ).map { case (kind, checkName, grLmt, tpLmt) =>
       so.filter(col("kind") === kind && col("srcTable") =!= "")
         .groupBy(col("srcKeyspace"), col("srcTable"))
         .agg(count(lit(1)).as("n"))
@@ -297,70 +307,52 @@ object DiagAnalysis {
             concat(lit(s"$kind "), col("name"), lit(" in "), col("keyspace")).as("message"))
       }
 
+    (perKind ++ udfuda :+ colCnt).reduce(_.unionByName(_))
+  }
+
+  /** The full warnings tab: `others` (schema, missing-node and workload
+    * warnings) plus the warnings that the collected threshold, gc and
+    * tombstone tabs decide (ref explore.py:1442-1464, 388-389, 358-361),
+    * ordered by (category, check, message). Every input is a local
+    * relation, so this runs no Spark job.
+    */
+  def warnings(others: DataFrame, thresholds: DataFrame, gc: DataFrame,
+      tombstones: DataFrame, tp: Thresholds): DataFrame = {
+    val gr = "Astra Guardrails"
+    val dh = "Database Health"
+    def tier(hard: Boolean) = if (hard) "***" else ""
+    def fmtNum(d: Double) = if (d == d.floor) d.toLong.toString else d.toString
+    def value(r: Row) = r.getAs[Double]("value")
+    val byTab = thresholds.collect().groupBy(_.getAs[String]("tab"))
+    def tab(name: String) = byTab.getOrElse(name, Array.empty[Row])
+    val presence = tabSpecs.filter(t => t.health && tab(t.name).nonEmpty)
+      .map(t => Row(dh, t.title, s"${t.title} greater than ${fmtNum(t.threshold(tp))}"))
     // table count (1448-1452): one warning off the max observed value
-    val tblCnt = metrics.toDF().filter(col("metric") === "Total number of tables")
-      .agg(max(num(col("value"))).as("v"))
-      .filter(col("v") >= tp.tpTblCnt)
-      .select(lit(gr).as("category"), lit("Number of Tables").as("check"),
-        concat(col("v").cast("long"), lit(" tables in database"),
-          when(col("v") >= tp.grTblCnt, "***").otherwise("")).as("message"))
-
-    // large partitions per distinct (dc,ks,tbl) (1453-1461)
-    val lpar = metrics.toDF()
-      .filter(col("metric") === "Compacted partition maximum bytes" &&
-        notSystem(col("keyspace"), inclSys = false))
-      .join(broadcast(nodeDc), Seq("node"), "left")
-      .withColumn("v", num(col("value")))
-      .filter(col("v") >= tp.tpLparMb * 1e6)
-      .groupBy(col("dc"), col("keyspace"), col("table"))
-      .agg(max(col("v")).as("v"))
-      .select(lit(gr).as("category"), lit("Large Partitions").as("check"),
-        // size rendered as a double ("260.0MB", "150.5MB") — the
-        // reference prints int(value)/1000000, a Python float
-        // (explore.py:1458-1461); golden-diffed byte-for-byte
-        concat(lit("Table "), col("dc"), lit("."), col("keyspace"), lit("."),
-          col("table"), lit(" partition size "),
-          (floor(col("v")) / 1e6).cast("string"), lit("MB"),
-          when(col("v") >= tp.grLparMb * 1e6, "***").otherwise("")).as("message"))
-
-    // GC P99 at database level (388-389)
-    val gcWarn = gcPct.filter(col("level") === "Database" && col("p99") > tp.tpGcpMs)
-      .select(lit(dh).as("category"), lit("GC Pauses").as("check"),
-        lit(s"P99 GC pause greater than ${tp.tpGcpMs}").as("message"))
-
-    // tombstone presence (358-361): the threshold is comma-grouped like
-    // the reference's "{:,}".format(tp_ts)
-    val tsWarn = tombstones.toDF().limit(1)
-      .select(lit(dh).as("category"), lit("Tombstones").as("check"),
-        lit("Tombstones greater than %,d in a single read request"
-          .formatLocal(java.util.Locale.US, tp.tpTs)).as("message"))
-
-    // single-entry Database Health presence warnings (1442-1446): any
-    // cfstats row at-or-over its tab threshold flips one fixed message
-    // per tab — "<Tab Name> greater than <threshold>"
-    def fmtNum(d: Double): String =
-      if (d == d.floor) d.toLong.toString else d.toString
-    val healthChecks = Seq(
-      ("Dropped Mutations", "Dropped Mutation", tp.tpDrm.toDouble, false),
-      ("SSTable count", "SSTable Count", tp.tpSstbl.toDouble, false),
-      ("Local read latency", "Read Latency", tp.tpRlMs, true),
-      ("Local write latency", "Write Latency", tp.tpWlMs, true))
-    val mSys = metrics.toDF().filter(notSystem(col("keyspace"), inclSys = false))
-    val presence = healthChecks.map { case (metric, tabName, thr, stripMs) =>
-      val v =
-        if (stripMs) num(regexp_replace(col("value"), "\\s*ms\\s*$", ""))
-        else num(col("value"))
-      mSys.filter(col("metric") === metric)
-        .withColumn("v", v)
-        .filter(col("v") >= thr && !isnan(col("v")))
-        .limit(1)
-        .select(lit(dh).as("category"), lit(tabName).as("check"),
-          lit(s"$tabName greater than ${fmtNum(thr)}").as("message"))
-    }
-
-    (perKind ++ udfuda ++ presence ++ Seq(colCnt, tblCnt, lpar, gcWarn, tsWarn))
-      .reduce(_.unionByName(_))
-      .orderBy("category", "check", "message")
+    val tables = tab("num_tables").map(value).maxOption.map(v => Row(gr,
+      "Number of Tables", s"${v.toLong} tables in database${tier(v >= tp.grTblCnt)}"))
+    // one per (dc, ks, tbl) (1453-1461), sized as the reference prints
+    // int(bytes)/1000000, a Python float ("260.0MB"): for whole byte
+    // counts, the tab's MB value
+    val partitions = tab("large_partition")
+      .groupBy(r => Seq("dc", "keyspace", "table").map(r.getAs[String]))
+      .map { case (where, rows) =>
+        val mb = rows.map(value).max
+        Row(gr, "Large Partitions", s"Table ${where.mkString(".")} partition size " +
+          s"${mb}MB${tier(mb >= tp.grLparMb)}")
+      }
+    val gcPauses = gc.collect()
+      .filter(r => r.getAs[String]("level") == "Database" && r.getAs[Int]("p99") > tp.tpGcpMs)
+      .map(_ => Row(dh, "GC Pauses", s"P99 GC pause greater than ${tp.tpGcpMs}"))
+    // the threshold is comma-grouped like the reference's "{:,}".format(tp_ts)
+    val tombstoneWarn = if (tombstones.isEmpty) None else Some(Row(dh, "Tombstones",
+      "Tombstones greater than %,d in a single read request"
+        .formatLocal(java.util.Locale.US, tp.tpTs)))
+    // orderBy's order: strings by their UTF-8 bytes, nulls first
+    val text = Ordering.Option(Ordering.by[String, UTF8String](UTF8String.fromString))
+    val rows = (others.collect() ++ presence ++ tables ++ partitions ++ gcPauses ++
+      tombstoneWarn).sortBy(r => (Option(r.getString(0)), Option(r.getString(1)),
+        Option(r.getString(2))))(Ordering.Tuple3(text, text, text))
+    others.sparkSession.createDataFrame(rows.toSeq.asJava, others.schema)
   }
 
   /** Unsupported-workload warnings (ref explore.py:696-702): any DSE

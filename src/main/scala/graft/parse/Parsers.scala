@@ -103,7 +103,9 @@ object Parsers {
     * `Column Family:` headers set context; every other `metric: value`
     * line becomes a long-format row; a blank line closes the table.
     * Keyspace-less lines (e.g. "Total number of tables") emit with
-    * empty keyspace/table.
+    * empty keyspace/table. Each value is parsed to a number here, once:
+    * a trailing `ms` unit is dropped ("150.5 ms" → 150.5, "NaN ms" →
+    * NaN), and text that is not a number ("[1, 0, 0]") is `None`.
     */
   def parseCfstats(node: String, lines: Iterator[String]): Iterator[TableMetric] = {
     var ks = ""
@@ -122,7 +124,7 @@ object Parsers {
       } else if (line.contains(":")) {
         val i = line.indexOf(':')
         val metric = line.substring(0, i).trim
-        val value = line.substring(i + 1).trim
+        val value = line.substring(i + 1).trim.stripSuffix("ms").trim.toDoubleOption
         Some(TableMetric(node, ks, tbl, isIndex, metric, value))
       } else None
     }

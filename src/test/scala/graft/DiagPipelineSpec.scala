@@ -386,4 +386,55 @@ class DiagPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(lf._1.nonEmpty && lf._2.nonEmpty)
     assert(events("\r\n") == lf)
   }
+
+  test("a cfstats value the report reads that is not a number fails it, naming where") {
+    val err = intercept[Throwable](DiagReport.analyze(spark, DiagPipelineSpec.miniSizedInMiB()))
+    val chain = DiagPipelineSpec.messages(err)
+    assert(chain.contains(DiagPipelineSpec.NotANumberAt), chain)
+  }
+
+  test("a cfstats line the report does not read may hold any text") {
+    val t2 = DiagReport.analyze(spark, DiagPipelineSpec.miniWithLevels())
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    Seq[DiagReport.Tabs => DataFrame](_.nodeTable, _.workload, _.gc, _.tombstones,
+      _.thresholds, _.warnings, _.proxyHist, _.seenTables)
+      .foreach(tab => assert(rows(tab(t2)) == rows(tab(tabs))))
+  }
+}
+
+object DiagPipelineSpec {
+  /** A diag_mini copy where node 10.0.0.2 gives ks1.users' `Space used
+    * (live)` as `1.2 MiB`, a value the workload tab reads. */
+  def miniSizedInMiB(): String =
+    miniWithCfstats(_.replaceFirst("Space used \\(live\\): 2000000000",
+      "Space used (live): 1.2 MiB"))
+
+  /** Where [[miniSizedInMiB]]'s value is, as the report's error names it. */
+  val NotANumberAt = "node 10.0.0.2, table ks1.users, metric Space used (live)"
+
+  /** A diag_mini copy where node 10.0.0.2 adds `SSTables in each level:
+    * [1, 0, 0]` to ks1.users, a line no tab reads. */
+  def miniWithLevels(): String =
+    miniWithCfstats(_.replaceFirst("\t\tSSTable count: 25",
+      "\t\tSSTables in each level: [1, 0, 0]\n\t\tSSTable count: 25"))
+
+  /** Every message in `err`'s cause chain, one a line. */
+  def messages(err: Throwable): String =
+    Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+
+  private def miniWithCfstats(edit: String => String): String = {
+    val src = Paths.get("src/test/resources/diag_mini")
+    val root = Files.createTempDirectory("graft_cfstats").resolve("diag")
+    Files.walk(src).iterator().asScala.foreach { p =>
+      val to = root.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    }
+    val cf = root.resolve("nodes/10.0.0.2/nodetool/cfstats")
+    val text = Files.readString(cf)
+    val edited = edit(text)
+    assert(edited != text)
+    Files.writeString(cf, edited)
+    root.toString
+  }
 }

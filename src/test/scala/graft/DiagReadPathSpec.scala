@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
-import org.apache.spark.sql.functions.{lit, raise_error}
+import org.apache.spark.sql.functions.{col, lit, raise_error, udf}
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import graft.sources.DiagSource
 
 import java.net.URI
@@ -74,6 +76,22 @@ class DiagReadPathSpec extends AnyFunSuite with SparkTestBase {
     val alive = Thread.getAllStackTraces.keySet.asScala
       .filter(t => t.getName == "diag-collect" && t.isAlive)
     assert(alive.isEmpty, alive.map(_.getName))
+  }
+
+  test("a failing tab cancels the other tabs' jobs instead of waiting for them") {
+    val tabs = DiagReport.analyze(spark, "src/test/resources/diag_mini")
+    val nap = udf { (x: Long) => Thread.sleep(30000); x }
+    val slow = spark.range(1).select(nap(col("id")).as("x"))
+    val bad = spark.range(4).select(raise_error(lit("tab exploded")).as("x"))
+    val t0 = System.nanoTime
+    val err = intercept[Throwable](
+      DiagReport.collected(spark, tabs.copy(nodeTable = slow, warnings = bad)))
+    val secs = (System.nanoTime - t0) / 1e9
+    assert(err.getMessage.contains("tab exploded"), err.getMessage)
+    assert(secs < 10, s"the failure surfaced after $secs s")
+    eventually(timeout(Span(5, Seconds))) {
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    }
   }
 }
 

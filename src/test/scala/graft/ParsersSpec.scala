@@ -46,10 +46,21 @@ class ParsersSpec extends AnyFunSuite {
 
   test("cfstats: 3-level blocks, index/legacy forms, keyspace-less metric") {
     val m = Parsers.parseCfstats("n1", lines("nodes/10_0_0_1/nodetool/cfstats")).toList
-    assert(m.exists(r => r.keyspace == "" && r.metric == "Total number of tables" && r.value == "160"))
+    assert(m.exists(r => r.keyspace == "" && r.metric == "Total number of tables" &&
+      r.value.contains(160.0)))
     val users = m.filter(r => r.keyspace == "ks1" && r.table == "users")
-    assert(users.exists(r => r.metric == "Local read count" && r.value == "12000"))
-    assert(users.exists(r => r.metric == "Local read latency" && r.value == "150.5 ms"))
+    assert(users.exists(r => r.metric == "Local read count" && r.value.contains(12000.0)))
+    // a trailing "ms" unit is dropped, and "NaN ms" is NaN
+    assert(users.exists(r => r.metric == "Local read latency" && r.value.contains(150.5)))
+    val idle = m.filter(r => r.table == "idle" && r.metric == "Local read latency")
+    assert(idle.nonEmpty && idle.forall(_.value.exists(_.isNaN)))
+    // text that is not a number still makes a row, valued None
+    val odd = Parsers.parseCfstats("n1", Iterator("Keyspace : ks", "\tTable: t",
+      "\t\tSSTables in each level: [1, 0, 0]", "\t\tLocal read count: ",
+      "\t\tSpace used (live): 1.2 MiB")).toList
+    assert(odd.map(r => (r.metric, r.value)) == List(
+      ("SSTables in each level", None), ("Local read count", None),
+      ("Space used (live)", None)))
     val idx = m.filter(_.table == "users_by_email_idx")
     assert(idx.nonEmpty && idx.forall(_.isIndex))
     val legacy = m.filter(_.table == "legacy_cf")
