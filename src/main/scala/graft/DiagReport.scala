@@ -19,8 +19,9 @@ import scala.jdk.CollectionConverters._
   * The analysis runs distributed and reduces every relation to a
   * report-sized tab (≤ thousands of rows). `analyze` then collects each
   * tab once, all tabs concurrently, and hands the sinks local relations
-  * of those rows, so no sink re-runs the analysis. The warnings that the
-  * threshold, gc and tombstone tabs decide are read off those rows.
+  * of those rows, so no sink re-runs the analysis. The warnings tab is
+  * then built on the driver, from those rows and the schema, status and
+  * gossip rows already parsed.
   * usage: DiagReport <diagRoot> <outDir>
   */
 object DiagReport {
@@ -55,46 +56,42 @@ object DiagReport {
     val tsEv = logs.flatMap(_._2)
     val nodeDc = info.select(col("node_dir").as("node"), col("dc"))
 
-    val dirIp = DiagSource.nodeIpMap(spark, root, statusRows.map(_.ip).toSet)
-      .toSeq.toDF("node_dir", "ip")
-    val tabs = try collected(spark, Tabs(
-      nodeTable = DiagAnalysis.nodeTable(status, gossip, info, ossVer, dirIp),
-      workload = DiagAnalysis.workload(metrics, rf, info, inclSys),
-      gc = DiagAnalysis.gcPercentiles(gcEv, nodeDc, cluster),
-      tombstones = DiagAnalysis.tombstoneTab(tsEv, nodeDc),
-      thresholds = DiagAnalysis.thresholdTabs(metrics, nodeDc, tp),
-      // the warnings that need no tab; the tabs' own join them below
-      warnings = DiagAnalysis.schemaWarnings(spark, catalog.objects, tp)
-        .unionByName(DiagAnalysis.missingNodeWarnings(status, gossip, dirIp))
-        .unionByName(DiagAnalysis.workloadWarnings(gossip)),
-      proxyHist = DiagAnalysis.proxyHistTab(DiagSource.proxyHist(spark, root), nodeDc),
-      clusterName = cluster,
-      seenTables = DiagAnalysis.seenTables(metrics, inclSys)))
-    finally {
-      metrics.unpersist()
-      logs.unpersist()
-    }
-    tabs.copy(warnings = DiagAnalysis.warnings(tabs.warnings, tabs.thresholds, tabs.gc,
-      tabs.tombstones, tp))
+    val ipOf = DiagSource.nodeIpMap(spark, root, statusRows.map(_.ip).toSet)
+    val dirIp = ipOf.toSeq.toDF("node_dir", "ip")
+    val Seq(nodeTable, workload, gc, tombstones, thresholds, proxyHist, seenTables) =
+      try collected(spark, Seq(
+        DiagAnalysis.nodeTable(status, gossip, info, ossVer, dirIp),
+        DiagAnalysis.workload(metrics, rf, info, inclSys),
+        DiagAnalysis.gcPercentiles(gcEv, nodeDc, cluster),
+        DiagAnalysis.tombstoneTab(tsEv, nodeDc),
+        DiagAnalysis.thresholdTabs(metrics, nodeDc, tp),
+        DiagAnalysis.proxyHistTab(DiagSource.proxyHist(spark, root), nodeDc),
+        DiagAnalysis.seenTables(metrics, inclSys)))
+      finally {
+        metrics.unpersist()
+        logs.unpersist()
+      }
+    // gossip is a local relation, so its collect runs no job either
+    val warnings = DiagAnalysis.warnings(catalog.objects, statusRows.toSeq,
+      gossip.collect().toSeq, ipOf, thresholds, gc, tombstones, tp)
+    Tabs(nodeTable, workload, gc, tombstones, thresholds, warnings, proxyHist,
+      cluster, seenTables)
   }
 
   /** `df`'s rows, collected once, as a local relation. */
   private def local(spark: SparkSession, df: DataFrame): DataFrame =
     spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
-  /** `tabs` with every relation collected once, concurrently, into a
-    * local relation. Each relation gets its own thread, so the queries'
-    * driver-side planning and codegen overlap as well as their jobs. The
-    * pool is made here, so its threads inherit the caller's Spark job
-    * group and local properties; each adds one job tag for this call.
-    * The first collect to fail cancels the others' jobs through that
-    * tag, and the call rethrows that collect's own exception once no
-    * pool thread is left. */
-  private[graft] def collected(spark: SparkSession, tabs: Tabs): Tabs = {
+  /** Each of `dfs` collected once, concurrently, into a local relation.
+    * Each relation gets its own thread, so the queries' driver-side
+    * planning and codegen overlap as well as their jobs. The pool is made
+    * here, so its threads inherit the caller's Spark job group and local
+    * properties; each adds one job tag for this call. The first collect
+    * to fail cancels the others' jobs through that tag, and the call
+    * rethrows that collect's own exception once no pool thread is left. */
+  private[graft] def collected(spark: SparkSession, dfs: Seq[DataFrame]): Seq[DataFrame] = {
     val sc = spark.sparkContext
     val tag = s"graft-diag-collect-${UUID.randomUUID}"
-    val dfs = Seq(tabs.nodeTable, tabs.workload, tabs.gc, tabs.tombstones,
-      tabs.thresholds, tabs.warnings, tabs.proxyHist, tabs.seenTables)
     val pool = Executors.newFixedThreadPool(dfs.size, { (r: Runnable) =>
       val t = new Thread(r, "diag-collect")
       t.setDaemon(true)
@@ -112,11 +109,7 @@ object DiagReport {
         try done.take().get()
         catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
       }
-      val Seq(nodeTable, workload, gc, tombstones, thresholds, warnings,
-        proxyHist, seenTables) = pending.map(_.get())
-      tabs.copy(nodeTable = nodeTable, workload = workload, gc = gc,
-        tombstones = tombstones, thresholds = thresholds, warnings = warnings,
-        proxyHist = proxyHist, seenTables = seenTables)
+      pending.map(_.get())
     } finally {
       // after a failure, cancel the other threads' jobs, and any job a
       // thread starts later, until every thread has ended

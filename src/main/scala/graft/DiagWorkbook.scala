@@ -178,10 +178,7 @@ object DiagWorkbook {
     // ---- threshold tabs (explore.py:445-450)
     val th = tabs.thresholds.collect().groupBy(_.getAs[String]("tab"))
     DiagAnalysis.tabSpecs.foreach { t =>
-      // 2-dp for ms/MB values, thousands format for counts
-      val fmt: Any => Any =
-        if (t.name == "read_latency" || t.name == "write_latency" || t.name == "large_partition") d2
-        else i0
+      val fmt: Any => Any = if (t.decimal) d2 else i0
       val rows = th.getOrElse(t.name, Array.empty[Row]).toSeq.map(r => Seq(
         get(r, "node"), get(r, "dc"), get(r, "keyspace"), get(r, "table"),
         fmt(num(r, "value"))))

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.model._
 
@@ -132,10 +133,12 @@ object DiagAnalysis {
       .select(col("keyspace"), col("table")).distinct()
 
   /** Multi-level GC percentile rollup (ref explore.py:332-341, 365-398,
-    * 1072-1077): the same events bucketed at Database → DC → Node via
-    * `rollup`, positional (exact, non-interpolated) percentiles picked
-    * at index round_half_up(n·q) clamped to [1,n], plus Pauses count,
+    * 1072-1077): the same events at Database → DC → Node, positional
+    * (exact, non-interpolated) percentiles picked at index
+    * round_half_up(n·q) clamped to [1,n], plus Pauses count,
     * oldest/newest timestamp, and the timestamp of the max pause.
+    * A node with no DC (no `nodetool/info`) counts under a null-named DC
+    * row, so the DC rows' pauses sum to the Database row's.
     * Documented deviation: Python's round() is banker's rounding, so at
     * exact .5 rank boundaries (n·q ties) the reference picks the lower
     * sample and this engine the upper; HALF_UP is used consistently here
@@ -156,25 +159,27 @@ object DiagAnalysis {
         struct(lit("Database").as("level"), lit(clusterName).as("name")))))
       .select(col("lvl.level").as("level"), col("lvl.name").as("name"),
         col("ts"), col("pauseMs"))
-    // distributed histogram selection (Relational.histPercentiles): the
-    // Database level no longer sorts every GC event in one window
-    // partition. pauseMs is an integer, so the identity bucketing already
-    // bounds the prefix-sum relation by the pause-value domain.
-    val pcts = Relational.histPercentiles(lvls, Seq("level", "name"), "pauseMs",
-      identity, (n, q) => least(greatest(round(n * q), lit(1L)), n),
-      Seq(0.50 -> "p50", 0.75 -> "p75", 0.90 -> "p90",
-        0.95 -> "p95", 0.98 -> "p98", 0.99 -> "p99"))
-    val base = lvls.groupBy(col("level"), col("name")).agg(
-      min(col("ts")).as("oldest"),
-      max(col("ts")).as("newest"),
-      max_by(col("ts"), struct(col("pauseMs"), col("ts"))).as("ts_of_max"))
-    pcts
-      .withColumnRenamed("n", "pauses")
-      .withColumnRenamed("min_v", "min_ms").withColumnRenamed("max_v", "max_ms")
-      .join(base, Seq("level", "name"))
-      .select(col("level"), col("name"), col("pauses"), col("min_ms"),
-        col("p50"), col("p75"), col("p90"), col("p95"), col("p98"), col("p99"),
-        col("max_ms"), col("oldest"), col("newest"), col("ts_of_max"))
+    // one histogram row per (level, name, pauseMs): pauseMs is an
+    // integer, so the relation is bounded by the pause-value domain and
+    // the Database level never sorts every event in one partition. The
+    // running count picks each percentile; the max pause's row is unique
+    // per group, so its newest ts is max_by(ts, struct(pauseMs, ts)).
+    val hist = lvls.groupBy(col("level"), col("name"), col("pauseMs")).agg(
+      count(lit(1)).as("c"), min(col("ts")).as("oldest"), max(col("ts")).as("newest"))
+    val byPause = Window.partitionBy(col("level"), col("name")).orderBy(col("pauseMs"))
+    def pick(q: Double) = min(when(col("cum") >=
+      least(greatest(round(col("pauses") * q), lit(1L)), col("pauses")), col("pauseMs")))
+    hist
+      .withColumn("cum", sum(col("c")).over(byPause))
+      // the group total over the same ordered spec: one window operator
+      .withColumn("pauses", sum(col("c")).over(
+        byPause.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .groupBy(col("level"), col("name"), col("pauses")).agg(
+        min(col("pauseMs")).as("min_ms"), pick(0.50).as("p50"), pick(0.75).as("p75"),
+        pick(0.90).as("p90"), pick(0.95).as("p95"), pick(0.98).as("p98"),
+        pick(0.99).as("p99"), max(col("pauseMs")).as("max_ms"),
+        min(col("oldest")).as("oldest"), max(col("newest")).as("newest"),
+        max_by(col("newest"), col("pauseMs")).as("ts_of_max"))
       .withColumn("level_rank",
         when(col("level") === "Database", 0).when(col("level") === "DC", 1).otherwise(2))
       .orderBy("level_rank", "name")
@@ -201,10 +206,13 @@ object DiagAnalysis {
     * reference reports the Large Partitions tab in MB, explore.py:1462).
     * `maxPerTable` keeps one row per table. `title` names the workbook
     * tab, with `headers`, and the tab's warning; a non-empty `health`
-    * tab flips "<title> greater than <threshold>" (explore.py:1442-1446). */
+    * tab flips "<title> greater than <threshold>" (explore.py:1442-1446).
+    * The workbook prints a `decimal` tab's values (ms, MB) with 2
+    * decimals, the others as thousands-grouped counts. */
   final case class TabSpec(name: String, title: String, metric: String,
       threshold: Thresholds => Double, headers: Seq[String],
-      maxPerTable: Boolean = false, perUnit: Double = 1.0, health: Boolean = false)
+      maxPerTable: Boolean = false, perUnit: Double = 1.0, health: Boolean = false,
+      decimal: Boolean = false)
 
   /** The reference's cfstats-driven tabs: the one place that names a
     * threshold metric and its threshold. */
@@ -216,14 +224,16 @@ object DiagAnalysis {
       maxPerTable = true),
     TabSpec("large_partition", "Large Partitions", "Compacted partition maximum bytes",
       _.tpLparMb * 1e6, Seq("Node", "DC", "Keyspace", "Table", "Partition Size(MB)"),
-      perUnit = 1e6),
+      perUnit = 1e6, decimal = true),
     TabSpec("sstable_count", "SSTable Count", "SSTable count", _.tpSstbl.toDouble,
       Seq("Example Node", "DC", "Keyspace", "Table", "SSTable Count"),
       maxPerTable = true, health = true),
     TabSpec("read_latency", "Read Latency", "Local read latency", _.tpRlMs,
-      Seq("Node", "DC", "Keyspace", "Table", "Read Latency (ms)"), health = true),
+      Seq("Node", "DC", "Keyspace", "Table", "Read Latency (ms)"), health = true,
+      decimal = true),
     TabSpec("write_latency", "Write Latency", "Local write latency", _.tpWlMs,
-      Seq("Node", "DC", "Keyspace", "Table", "Write Latency (ms)"), health = true))
+      Seq("Node", "DC", "Keyspace", "Table", "Write Latency (ms)"), health = true,
+      decimal = true))
 
   /** Threshold tabs (P3/P4, ref explore.py:1424-1492): one filter of the
     * metric relation joined to the spec relation, then one ranking;
@@ -259,68 +269,87 @@ object DiagAnalysis {
       .orderBy("tab", "keyspace", "table", "node")
   }
 
+  private def tier(hard: Boolean) = if (hard) "***" else ""
+
   /** Astra Guardrails read off the schema (ref explore.py:1085-1119,
-    * 809-838): returns (category, check, message) rows. `***` marks the
+    * 809-838): (category, check, message) rows. `***` marks the
     * hard-guardrail tier (P4). Implements collect-all intent for the
     * UDF/UDA and column-count warnings (the reference's `.append =` bug
-    * records only the first — SURVEY.md §4).
+    * records only the first — SURVEY.md §4). `Parsers.parseSchema`
+    * never leaves a field null.
     */
-  def schemaWarnings(spark: SparkSession, schema: Seq[SchemaObject],
-      tp: Thresholds): DataFrame = {
-    import spark.implicits._
+  def schemaWarnings(schema: Seq[SchemaObject], tp: Thresholds): Seq[Row] = {
     val gr = "Astra Guardrails"
     // like thresholdTabs: guardrails always exclude the full system list
     // (explore.py:1094, 1105 use system_keyspace)
-    val so = spark.createDataset(schema).toDF()
-      .filter(notSystem(col("keyspace"), inclSys = false))
-
+    val so = schema.filterNot(o => SystemKeyspaces.contains(o.keyspace))
     // MV / SI / SAI counts per source table (1085-1099)
     val perKind = Seq(
-      ("Materialized Views", "Materialized Views", tp.grMv, tp.tpMv),
-      ("Index", "Secondary Indexes", tp.grSi, tp.tpSi),
+      ("Materialized Views", "Materialized Views", tp.grMv, tp.tpMv.toDouble),
+      ("Index", "Secondary Indexes", tp.grSi, tp.tpSi.toDouble),
       ("Storage-Attached Index", "Storage-Attached Indexes", tp.grSai, tp.tpSai)
-    ).map { case (kind, checkName, grLmt, tpLmt) =>
-      so.filter(col("kind") === kind && col("srcTable") =!= "")
-        .groupBy(col("srcKeyspace"), col("srcTable"))
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") > tpLmt)
-        .select(lit(gr).as("category"), lit(checkName).as("check"),
-          concat(col("n"), lit(s" $checkName of "), col("srcKeyspace"),
-            lit("."), col("srcTable"),
-            when(col("n") > grLmt, "***").otherwise("")).as("message"))
+    ).flatMap { case (kind, checkName, grLmt, tpLmt) =>
+      so.filter(o => o.kind == kind && o.srcTable.nonEmpty)
+        .groupBy(o => (o.srcKeyspace, o.srcTable)).toSeq
+        .collect { case ((ks, tbl), objs) if objs.size > tpLmt =>
+          Row(gr, checkName, s"${objs.size} $checkName of $ks.$tbl${tier(objs.size > grLmt)}")
+        }
     }
-
     // column count per table (1101-1119)
-    val colCnt = so.filter(col("kind") === "Table")
-      .select(col("keyspace"), col("name"), size(col("fields")).as("n"))
-      .filter(col("n") > tp.tpColCnt)
-      .select(lit(gr).as("category"), lit("Number of Columns").as("check"),
-        concat(col("n"), lit(" columns in "), col("keyspace"), lit("."),
-          col("name"),
-          when(col("n") > tp.grColCnt, "***").otherwise("")).as("message"))
-
+    val colCnt = so.filter(o => o.kind == "Table" && o.fields.size > tp.tpColCnt)
+      .map(o => Row(gr, "Number of Columns", s"${o.fields.size} columns in " +
+        s"${o.keyspace}.${o.name}${tier(o.fields.size > tp.grColCnt)}"))
     // UDF / UDA presence (809-838)
     val udfuda = Seq(("UDA", "User-Defined Aggregate"), ("UDF", "User-Defined Function"))
-      .map { case (kind, checkName) =>
-        so.filter(col("kind") === kind)
-          .select(lit(gr).as("category"), lit(checkName).as("check"),
-            concat(lit(s"$kind "), col("name"), lit(" in "), col("keyspace")).as("message"))
+      .flatMap { case (kind, checkName) =>
+        so.filter(_.kind == kind)
+          .map(o => Row(gr, checkName, s"$kind ${o.name} in ${o.keyspace}"))
       }
-
-    (perKind ++ udfuda :+ colCnt).reduce(_.unionByName(_))
+    perKind ++ udfuda ++ colCnt
   }
 
-  /** The full warnings tab: `others` (schema, missing-node and workload
-    * warnings) plus the warnings that the collected threshold, gc and
-    * tombstone tabs decide (ref explore.py:1442-1464, 388-389, 358-361),
-    * ordered by (category, check, message). Every input is a local
-    * relation, so this runs no Spark job.
+  /** Unsupported-workload warnings (ref explore.py:696-702): any DSE
+    * workload other than plain Cassandra (parsed to 'DSE Core') gets a
+    * 'Workload'/'Not Supported' warning with the raw workload name, and
+    * Graph-enabled nodes add a 'Graph' warning — deduplicated, like the
+    * reference's add_to_warning. Empty workload = OSS node, no warning.
     */
-  def warnings(others: DataFrame, thresholds: DataFrame, gc: DataFrame,
+  def workloadWarnings(gossip: Seq[GossipNode]): Seq[Row] = {
+    val unsupported = gossip.map(_.workload.replaceAll(" \\+ Graph$", ""))
+      .filter(w => w != "" && w != "DSE Core")
+    val graph = gossip.filter(_.graph).map(_ => "Graph")
+    (unsupported ++ graph).distinct.map(Row("Workload", "Not Supported", _))
+  }
+
+  /** Missing-node detection (ref explore.py:302-304, 683-686): an IP
+    * seen in nodetool/status or gossipinfo with no matching node
+    * directory (`dirIps`) yields a 'Missing Data'/'Missing Node Data'
+    * warning row, and its presence flips summary_json.missing_data to 1.
+    * Documented deviation: the reference also silently drops such nodes
+    * from the node tab; this engine keeps the row (with zero/default
+    * fields) so a down node stays visible alongside its warning.
+    */
+  def missingNodeWarnings(status: Seq[StatusRow], gossip: Seq[GossipNode],
+      dirIps: Set[String]): Seq[Row] =
+    (status.map(_.ip) ++ gossip.map(_.ip)).distinct.filterNot(dirIps)
+      .map(Row("Missing Data", "Missing Node Data", _))
+
+  private val WarningSchema =
+    StructType(Seq("category", "check", "message").map(StructField(_, StringType)))
+
+  /** The warnings tab, built on the driver once the data tabs are
+    * collected: the schema, workload and missing-node warnings from the
+    * rows the report already holds (`ipOf` maps node dir → IP), plus
+    * the warnings that the collected threshold, gc and tombstone tabs
+    * decide (ref explore.py:1442-1464, 388-389, 358-361), ordered by
+    * (category, check, message). Every input is local, so this runs no
+    * Spark job.
+    */
+  def warnings(schema: Seq[SchemaObject], status: Seq[StatusRow], gossip: Seq[GossipNode],
+      ipOf: Map[String, String], thresholds: DataFrame, gc: DataFrame,
       tombstones: DataFrame, tp: Thresholds): DataFrame = {
     val gr = "Astra Guardrails"
     val dh = "Database Health"
-    def tier(hard: Boolean) = if (hard) "***" else ""
     def fmtNum(d: Double) = if (d == d.floor) d.toLong.toString else d.toString
     def value(r: Row) = r.getAs[Double]("value")
     val byTab = thresholds.collect().groupBy(_.getAs[String]("tab"))
@@ -347,47 +376,13 @@ object DiagAnalysis {
     val tombstoneWarn = if (tombstones.isEmpty) None else Some(Row(dh, "Tombstones",
       "Tombstones greater than %,d in a single read request"
         .formatLocal(java.util.Locale.US, tp.tpTs)))
-    // orderBy's order: strings by their UTF-8 bytes, nulls first
-    val text = Ordering.Option(Ordering.by[String, UTF8String](UTF8String.fromString))
-    val rows = (others.collect() ++ presence ++ tables ++ partitions ++ gcPauses ++
-      tombstoneWarn).sortBy(r => (Option(r.getString(0)), Option(r.getString(1)),
-        Option(r.getString(2))))(Ordering.Tuple3(text, text, text))
-    others.sparkSession.createDataFrame(rows.toSeq.asJava, others.schema)
-  }
-
-  /** Unsupported-workload warnings (ref explore.py:696-702): any DSE
-    * workload other than plain Cassandra (parsed to 'DSE Core') gets a
-    * 'Workload'/'Not Supported' warning with the raw workload name, and
-    * Graph-enabled nodes add a 'Graph' warning — deduplicated, like the
-    * reference's add_to_warning. Empty workload = OSS node, no warning.
-    */
-  def workloadWarnings(gossip: Dataset[GossipNode]): DataFrame = {
-    val g = gossip.toDF()
-    val raw = regexp_replace(col("workload"), " \\+ Graph$", "")
-    val unsupported = g.select(raw.as("message"))
-      .filter(col("message") =!= "" && col("message") =!= "DSE Core")
-    val graphWarn = g.filter(col("graph")).select(lit("Graph").as("message"))
-    unsupported.unionByName(graphWarn).distinct()
-      .select(lit("Workload").as("category"), lit("Not Supported").as("check"),
-        col("message"))
-  }
-
-  /** Missing-node detection (ref explore.py:302-304, 683-686): an IP
-    * seen in nodetool/status or gossipinfo with no matching node
-    * directory yields a 'Missing Data'/'Missing Node Data' warning row,
-    * and its presence flips summary_json.missing_data to 1. Documented
-    * deviation: the reference also silently drops such nodes from the
-    * node tab; this engine keeps the row (with zero/default fields) so a
-    * down node stays visible alongside its warning.
-    */
-  def missingNodeWarnings(status: Dataset[StatusRow], gossip: Dataset[GossipNode],
-      dirIp: DataFrame): DataFrame = {
-    val seen = status.toDF().select(col("ip"))
-      .unionByName(gossip.toDF().select(col("ip")))
-      .distinct()
-    seen.join(broadcast(dirIp.select(col("ip"))), Seq("ip"), "left_anti")
-      .select(lit("Missing Data").as("category"),
-        lit("Missing Node Data").as("check"), col("ip").as("message"))
+    // orderBy's order: strings by their UTF-8 bytes (no field is null)
+    val text = Ordering.by[String, UTF8String](UTF8String.fromString)
+    val rows = (schemaWarnings(schema, tp) ++ missingNodeWarnings(status, gossip,
+      ipOf.values.toSet) ++ workloadWarnings(gossip) ++ presence ++ tables ++ partitions ++
+      gcPauses ++ tombstoneWarn).sortBy(r => (r.getString(0), r.getString(1),
+        r.getString(2)))(Ordering.Tuple3(text, text, text))
+    thresholds.sparkSession.createDataFrame(rows.asJava, WarningSchema)
   }
 
   /** Proxy-histogram tab (ref explore.py:1500-1509, 1516-1560): one row

@@ -47,23 +47,11 @@ object Relational {
     */
   def histPercentiles(rows: DataFrame, keys: Seq[String], valueCol: String,
       bucketOf: Column => Column, idxOf: (Column, Double) => Column,
-      qs: Seq[(Double, String)]): DataFrame =
-    histPercentilesFromHist(
-      rows.groupBy(keys.map(col) :+ col(valueCol): _*)
-        .agg(count(lit(1)).as("__c")),
-      keys, valueCol, bucketOf, idxOf, qs)
-
-  /** [[histPercentiles]] over a PRE-AGGREGATED histogram (keys + value +
-    * `__c` count) — the entry point for hierarchical rollups (q20): the
-    * raw rows shuffle once to the finest level's histogram, and coarser
-    * levels re-aggregate that small relation instead of re-shuffling the
-    * events once per level. */
-  def histPercentilesFromHist(hist0: DataFrame, keys: Seq[String],
-      valueCol: String, bucketOf: Column => Column,
-      idxOf: (Column, Double) => Column,
       qs: Seq[(Double, String)]): DataFrame = {
     val k = keys.map(col)
-    val hist = hist0.withColumn("__b", bucketOf(col(valueCol)))
+    val hist = rows.groupBy(k :+ col(valueCol): _*)
+      .agg(count(lit(1)).as("__c"))
+      .withColumn("__b", bucketOf(col(valueCol)))
     val bstats = hist.groupBy(k :+ col("__b"): _*).agg(sum(col("__c")).as("__bc"))
     val wb = Window.partitionBy(k: _*).orderBy(col("__b"))
     val boff = bstats
@@ -598,9 +586,11 @@ object Relational {
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
 
   // ---------------------------------------------------------------- q20
-  /** 3-level rollup of positional percentiles + argmax timestamps — the
-    * oracle twin of DiagAnalysis.gcPercentiles (A6–A9 at Database → DC →
-    * Node, ref explore.py:332-341, 365-398, 1072-1077). Levels are
+  /** 3-level rollup of positional percentiles + argmax timestamps over
+    * a continuous value (A6–A9, the shape of the reference's Database →
+    * DC → Node GC rollup, explore.py:332-341, 365-398, 1072-1077;
+    * DiagAnalysis.gcPercentiles serves the integer-valued GC tab with a
+    * one-pass histogram instead). Levels are
     * materialized by exploding each event into its level rows, then the
     * percentiles come from the distributed histogram selection
     * ([[histPercentiles]]) — the "all" level no longer sorts the whole
@@ -622,8 +612,7 @@ object Relational {
     // materialization it required is pure overhead. The explode's 3N
     // shuffle already runs map-side partial aggregation, which is the
     // intrinsic cost of 3-level positional percentiles on a continuous
-    // domain. Use [[histPercentilesFromHist]] hierarchically only when
-    // the value domain is BOUNDED (ints, ms buckets — the GC case).
+    // domain.
     val lvls = ev.select(col("ts"), col("value"), col("event_id"),
       explode(array(
         struct(lit("all").as("level"), lit("__ALL__").as("name")),

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
+import graft.model.Thresholds
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -393,6 +394,141 @@ class DiagPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(chain.contains(DiagPipelineSpec.NotANumberAt), chain)
   }
 
+  test("gc: a node with no nodetool/info keeps its pauses in a null-DC row") {
+    val gc = DiagReport.analyze(spark, DiagPipelineSpec.miniWithoutInfo()).gc.collect()
+    def pauses(level: String) =
+      gc.filter(_.getAs[String]("level") == level).map(_.getAs[Long]("pauses"))
+    assert(pauses("Database").toSeq == Seq(6L))
+    assert(pauses("DC").sum == 6L, gc.mkString("\n"))
+    val orphan = gc.find(r => r.getAs[String]("level") == "DC" && r.isNullAt(1))
+    assert(orphan.map(_.getAs[Long]("pauses")).contains(1L), gc.mkString("\n"))
+  }
+
+  test("warnings under lowered thresholds: both tiers of every schema check") {
+    def warnings(tp: Thresholds) =
+      DiagReport.analyze(spark, "src/test/resources/diag_mini", tp).warnings.collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    val hard = warnings(Thresholds(tpMv = 0, tpSi = 0, tpSai = 0, tpColCnt = 3,
+      grColCnt = 50))
+    val soft = warnings(Thresholds(tpMv = 0, tpSi = 0, tpSai = 0, grMv = 5, grSi = 5,
+      grSai = 0))
+    // the warnings both runs share: every one the data tabs, status and
+    // gossip decide, and the UDF/UDA checks, which have no threshold
+    val common = Seq(
+      ("Astra Guardrails", "Large Partitions", "Table dc1.ks1.orders partition size 150.0MB"),
+      ("Astra Guardrails", "Large Partitions", "Table dc1.ks1.users partition size 260.0MB***"),
+      ("Astra Guardrails", "Large Partitions", "Table dc2.ks1.orders partition size 150.0MB"),
+      ("Astra Guardrails", "Large Partitions", "Table dc2.ks1.users partition size 260.0MB***"),
+      ("Database Health", "Dropped Mutation", "Dropped Mutation greater than 100000"),
+      ("Database Health", "GC Pauses", "P99 GC pause greater than 800"),
+      ("Database Health", "Read Latency", "Read Latency greater than 100"),
+      ("Database Health", "SSTable Count", "SSTable Count greater than 20"),
+      ("Database Health", "Tombstones",
+        "Tombstones greater than 1,000 in a single read request"),
+      ("Missing Data", "Missing Node Data", "10.0.0.9"),
+      ("Workload", "Not Supported", "Graph"),
+      ("Workload", "Not Supported", "Search"),
+      ("Astra Guardrails", "Number of Tables", "160 tables in database"),
+      ("Astra Guardrails", "User-Defined Aggregate", "UDA average in ks1"),
+      ("Astra Guardrails", "User-Defined Function", "UDF avgstate in ks1"),
+      ("Astra Guardrails", "User-Defined Function", "UDF maxof in ks1"))
+    def sorted(ws: Seq[(String, String, String)]) = ws.sortBy(w => (w._1, w._2, w._3))
+    assert(hard == sorted(common ++ Seq(
+      ("Astra Guardrails", "Materialized Views", "3 Materialized Views of ks1.users***"),
+      ("Astra Guardrails", "Number of Columns", "4 columns in ks1.users"),
+      ("Astra Guardrails", "Number of Columns", "52 columns in ks2.legacy_cf***"),
+      ("Astra Guardrails", "Secondary Indexes", "2 Secondary Indexes of ks1.users***"),
+      ("Astra Guardrails", "Storage-Attached Indexes",
+        "1 Storage-Attached Indexes of ks1.users"))))
+    assert(soft == sorted(common ++ Seq(
+      ("Astra Guardrails", "Materialized Views", "3 Materialized Views of ks1.users"),
+      ("Astra Guardrails", "Number of Columns", "52 columns in ks2.legacy_cf"),
+      ("Astra Guardrails", "Secondary Indexes", "2 Secondary Indexes of ks1.users"),
+      ("Astra Guardrails", "Storage-Attached Indexes",
+        "1 Storage-Attached Indexes of ks1.users***"))))
+  }
+
+  test("gc: the one-pass histogram picks what a rank window over the events picks") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import graft.model.GcEvent
+    import graft.operators.DiagAnalysis
+    // n5 has no DC
+    val nodeDc = Seq("n1" -> "dcA", "n2" -> "dcA", "n3" -> "dcB", "n4" -> "dcB")
+      .toDF("node", "dc")
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    for ((size, seed) <- Seq(1 -> 1, 9 -> 2, 700 -> 3)) {
+      val rnd = new scala.util.Random(seed)
+      // pauses from a 6-value domain, so ties everywhere; every 7th event
+      // is the max pause, each at its own ts
+      val ev = (1 to size).map { i =>
+        val (pause, at) =
+          if (i % 7 == 0) (900, t0 + i * 1000L) else (200 + rnd.nextInt(6), t0 + rnd.nextInt(40) * 60000L)
+        GcEvent(s"n${1 + rnd.nextInt(5)}", new java.sql.Timestamp(at), pause)
+      }.toDS()
+      val lvls = ev.toDF().join(nodeDc, Seq("node"), "left")
+        .select(explode(array(
+          struct(lit("Node").as("level"), col("node").as("name")),
+          struct(lit("DC").as("level"), col("dc").as("name")),
+          struct(lit("Database").as("level"), lit("C").as("name")))).as("l"),
+          col("ts"), col("pauseMs"))
+        .select(col("l.level").as("level"), col("l.name").as("name"), col("ts"), col("pauseMs"))
+      val byLevel = Window.partitionBy(col("level"), col("name"))
+      val ranked = lvls
+        .withColumn("rn", row_number().over(byLevel.orderBy(col("pauseMs"), col("ts"))))
+        .withColumn("n", count(lit(1)).over(byLevel))
+      def pick(q: Double) = max(when(col("rn") ===
+        least(greatest(round(col("n") * q), lit(1L)), col("n")), col("pauseMs")))
+      val want = ranked.groupBy(col("level"), col("name"), col("n")).agg(
+        min(col("pauseMs")), pick(0.50), pick(0.75), pick(0.90), pick(0.95), pick(0.98),
+        pick(0.99), max(col("pauseMs")), min(col("ts")), max(col("ts")),
+        max_by(col("ts"), struct(col("pauseMs"), col("ts"))))
+      val got = DiagAnalysis.gcPercentiles(ev, nodeDc, "C")
+      assert(rows(got) == rows(want), s"$size events")
+      if (size > 100) assert(got.collect().exists(r => r.getString(0) == "DC" && r.isNullAt(1)))
+    }
+  }
+
+  test("the warnings tab is built from the collected tabs without a Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    import graft.operators.DiagAnalysis
+    import graft.sources.DiagSource
+    val root = "src/test/resources/diag_mini"
+    val status = DiagSource.status(spark, root).collect().toSeq
+    val gossip = DiagSource.gossip(spark, root).collect().toSeq
+    val catalog = DiagSource.schema(spark, root, status.map(_.dc).distinct.sorted)
+    val ipOf = DiagSource.nodeIpMap(spark, root, status.map(_.ip).toSet)
+    val sc = spark.sparkContext
+    val group = s"warnings-${java.util.UUID.randomUUID}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    val built = try {
+      sc.setJobGroup(group, "build the warnings tab")
+      val w = DiagAnalysis.warnings(catalog.objects, status, gossip, ipOf,
+        tabs.thresholds, tabs.gc, tabs.tombstones, Thresholds())
+      val rows = w.collect()
+      // the listener bus delivers in order: once this marker job is seen,
+      // every job started before it has been seen too
+      sc.setJobGroup(s"$group-end", "marker")
+      spark.range(1).count()
+      eventually(timeout(Span(10, Seconds))) { assert(groups.contains(s"$group-end")) }
+      rows
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(!groups.contains(group))
+    assert(built.toSeq == tabs.warnings.collect().toSeq)
+  }
+
   test("a cfstats line the report does not read may hold any text") {
     val t2 = DiagReport.analyze(spark, DiagPipelineSpec.miniWithLevels())
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
@@ -423,13 +559,26 @@ object DiagPipelineSpec {
     Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
       .map(e => String.valueOf(e.getMessage)).mkString("\n")
 
-  private def miniWithCfstats(edit: String => String): String = {
+  /** A diag_mini copy without node 10.0.0.2's `nodetool/info`: the node
+    * keeps its GC pause but has no DC. */
+  def miniWithoutInfo(): String = {
+    val root = copyOfMini()
+    Files.delete(root.resolve("nodes/10.0.0.2/nodetool/info"))
+    root.toString
+  }
+
+  private def copyOfMini(): java.nio.file.Path = {
     val src = Paths.get("src/test/resources/diag_mini")
-    val root = Files.createTempDirectory("graft_cfstats").resolve("diag")
+    val root = Files.createTempDirectory("graft_mini").resolve("diag")
     Files.walk(src).iterator().asScala.foreach { p =>
       val to = root.resolve(src.relativize(p).toString)
       if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
     }
+    root
+  }
+
+  private def miniWithCfstats(edit: String => String): String = {
+    val root = copyOfMini()
     val cf = root.resolve("nodes/10.0.0.2/nodetool/cfstats")
     val text = Files.readString(cf)
     val edited = edit(text)

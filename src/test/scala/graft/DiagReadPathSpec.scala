@@ -69,7 +69,8 @@ class DiagReadPathSpec extends AnyFunSuite with SparkTestBase {
     val tabs = DiagReport.analyze(spark, "src/test/resources/diag_mini")
     val bad = spark.range(4).select(raise_error(lit("tab exploded")).as("x"))
     val direct = intercept[Throwable](bad.collect())
-    val pooled = intercept[Throwable](DiagReport.collected(spark, tabs.copy(warnings = bad)))
+    val pooled = intercept[Throwable](DiagReport.collected(spark, Seq(tabs.nodeTable,
+      tabs.workload, tabs.gc, tabs.tombstones, tabs.thresholds, bad, tabs.seenTables)))
     assert(!pooled.isInstanceOf[ExecutionException])
     assert(pooled.getClass == direct.getClass)
     assert(pooled.getMessage.contains("tab exploded"), pooled.getMessage)
@@ -85,7 +86,8 @@ class DiagReadPathSpec extends AnyFunSuite with SparkTestBase {
     val bad = spark.range(4).select(raise_error(lit("tab exploded")).as("x"))
     val t0 = System.nanoTime
     val err = intercept[Throwable](
-      DiagReport.collected(spark, tabs.copy(nodeTable = slow, warnings = bad)))
+      DiagReport.collected(spark, Seq(slow, tabs.workload, tabs.gc, tabs.tombstones,
+        tabs.thresholds, bad, tabs.seenTables)))
     val secs = (System.nanoTime - t0) / 1e9
     assert(err.getMessage.contains("tab exploded"), err.getMessage)
     assert(secs < 10, s"the failure surfaced after $secs s")

@@ -260,22 +260,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("histPercentilesFromHist(pre-agg) ≡ histPercentiles(raw) on bounded-int data") {
-    import spark.implicits._
-    import graft.operators.Relational
-    val rnd = new scala.util.Random(77)
-    val rows = Seq.fill(3000)((if (rnd.nextBoolean()) "a" else "b",
-      (rnd.nextInt(40) + 1).toDouble)).toDF("k", "v")
-    val qs = Seq(0.5 -> "p50", 0.9 -> "p90", 0.99 -> "p99")
-    val viaRaw = Relational.histPercentiles(rows, Seq("k"), "v",
-      floor, Relational.idxHalfUp, qs).orderBy("k").collect().toSeq
-    val viaHist = Relational.histPercentilesFromHist(
-      rows.groupBy(col("k"), col("v")).agg(count(lit(1)).as("__c")),
-      Seq("k"), "v", floor, Relational.idxHalfUp, qs)
-      .orderBy("k").collect().toSeq
-    assert(viaRaw.map(_.toString) == viaHist.map(_.toString))
-  }
-
   test("q05/q20: NULL event_type is its own __NULL__ group — not dropped, not merged with __ALL__") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_nullgrp").toString
